@@ -2425,9 +2425,8 @@ def q_cdc_chunks(spark, sf_dir):
     rolling 8-gram hash ≡ 0 mod 64 — boundaries depend only on local
     content, so an early insertion shifts ONE chunk and every later
     chunk still dedups by its hash (why LBFS/restic/borg chunk this
-    way). Arrow-kernel rolling/prefix hash (r13, guide §4.2 — the
-    interpreted HOF twin stays behind use_kernel=False); map-only, no
-    shuffle."""
+    way). Arrow-kernel rolling/prefix hash (r13, guide §4.2); map-only,
+    no shuffle."""
     from yandex_tracker_exporter_spark.operators.dedup import cdc_chunks
 
     docs = _t_wide(spark, sf_dir, "documents")
@@ -3067,9 +3066,7 @@ def q_assortativity(spark, sf_dir):
 COPURCHASE_MAX_BASKET = 1_000
 
 
-def _copurchase_pairs(
-    li, max_basket=COPURCHASE_MAX_BASKET, single_exchange=True
-):
+def _copurchase_pairs(li, max_basket=COPURCHASE_MAX_BASKET):
     """(p1, p2, n_together) co-purchase pair counts from a
     (l_orderkey, l_partkey) relation, with the basket-width rail
     applied to ONE self-join side only — every pair of an order needs
@@ -3107,26 +3104,21 @@ def _copurchase_pairs(
     if max_basket is not None:
         a = _cap_hub_buckets(a, ("ok",), max_basket, "window")
     raw = a.join(b, "ok").where(F.col("p1") != F.col("p2"))
-    if single_exchange:
-        # r13 (guide §2.4, VERDICT r12 #4): hash the pair stream by p1
-        # BEFORE the aggregation — HashPartitioning(p1) satisfies the
-        # groupBy(p1, p2) clustering requirement AND the downstream
-        # top-3 window's partitionBy(p1), so the plan pays ONE exchange
-        # where the default shape paid two ((p1,p2) agg exchange + (p1)
-        # window exchange). Paired A/B at sf0.1: best 1.182 vs 1.539 s,
-        # med 1.229 vs 1.655, results identical. Trade-off: the raw
-        # pairs cross the exchange without map-side partial
-        # aggregation; that reduction only bites when the same (p1,p2)
-        # repeats WITHIN one map partition (orders are the map key, so
-        # repeats need co-purchases duplicated across orders in one
-        # partition) — at extreme pair-duplication rates flip
-        # single_exchange=False to restore the partial-agg shape.
-        return (
-            raw.repartition(F.col("p1"))
-            .groupBy("p1", "p2")
-            .agg(F.count(F.lit(1)).alias("n_together"))
-        )
-    return raw.groupBy("p1", "p2").agg(F.count(F.lit(1)).alias("n_together"))
+    # r13 (guide §2.4): hash the pair stream by p1 BEFORE the
+    # aggregation — HashPartitioning(p1) satisfies the groupBy(p1, p2)
+    # clustering requirement AND the downstream top-3 window's
+    # partitionBy(p1), so the plan pays ONE exchange instead of two
+    # (paired A/B at sf0.1: best 1.182 vs 1.539 s, results identical).
+    # The raw pairs cross that exchange without map-side partial
+    # aggregation, and the hash key is the part, not the order: hot-p1
+    # skew (one part in many orders) lands every pair of that part in
+    # one reducer task, which this shape does not bound — the basket
+    # rail caps orders, not parts.
+    return (
+        raw.repartition(F.col("p1"))
+        .groupBy("p1", "p2")
+        .agg(F.count(F.lit(1)).alias("n_together"))
+    )
 
 
 def q_copurchase_recs(spark, sf_dir):
@@ -3135,7 +3127,7 @@ def q_copurchase_recs(spark, sf_dir):
     AND the ``COPURCHASE_MAX_BASKET`` rail, never a corpus self-join),
     pair counts rank per part, top-3 kept — one window over the
     pair-count relation, riding the SAME p1 exchange as the pair
-    aggregation (r13 single_exchange, guide §2.4: 3 exchanges → 2). _t (r12 optimization): the old _t_wide
+    aggregation (r13, guide §2.4: 3 exchanges → 2). _t (r12 optimization): the old _t_wide
     round-robin predates the broadcast self-join — today's plan put its
     Exchange DIRECTLY under the rail window's hash exchange on one
     branch and under the BroadcastExchange on the other (both sides

@@ -86,7 +86,7 @@ def test_cdc_chunk_hash_is_the_portable_poly_hash(spark):
 def _cdc_chunks_column_path(df, content_col="text", id_col="doc_id",
                             window=8, mask_mod=64):
     """Verbatim pre-r12-batch-6 Column-builder implementation of
-    cdc_chunks — the reference the SQL-string rewrite must equal
+    cdc_chunks — the expression reference the Arrow kernel must equal
     (the test_window_funnel_sql_fold_matches_column_fold pattern)."""
     from yandex_tracker_exporter_spark.operators.dedup import (
         MINHASH_PRIME,
@@ -168,12 +168,10 @@ def _cdc_chunks_column_path(df, content_col="text", id_col="doc_id",
 
 
 def test_cdc_chunks_sql_twin_matches_column_path(spark):
-    """r12 batch 6: cdc_chunks renders its expression pipeline as SQL
-    strings (one JVM parse each) instead of ~1,500 py4j Column calls.
-    Rows must be IDENTICAL to the verbatim old Column build on every
-    shape: empty doc, sub-window doc, exact-window doc, long text with
-    real cuts, non-ASCII codepoints, NULL doc (filtered), and a
-    non-default window/mask config."""
+    """cdc_chunks must produce rows IDENTICAL to the verbatim old Column
+    build on every shape: empty doc, sub-window doc, exact-window doc,
+    long text with real cuts, non-ASCII codepoints, NULL doc (filtered),
+    and a non-default window/mask config."""
     import random
 
     rng = random.Random(7)
@@ -203,12 +201,13 @@ def test_cdc_chunks_sql_twin_matches_column_path(spark):
 
 
 def test_cdc_chunks_kernel_matches_sql_twin(spark):
-    """r13 (VERDICT r12 #3): the Arrow kernel computes the SQL twin's
-    exact integers — same unrolled rolling window hash, per-chunk
-    hashes via exact modular prefix hashing (never floats). Rows must
-    be IDENTICAL on every shape: empty doc, sub-window doc,
-    exact-window doc, long text with real cuts, non-ASCII codepoints,
-    NULL doc (filtered), and a non-default window/mask config."""
+    """The Arrow kernel behind cdc_chunks computes exactly the integers
+    of the verbatim Column-expression build (the expression twin) —
+    same unrolled rolling window hash, per-chunk hashes via exact
+    modular prefix hashing (never floats). Rows must be IDENTICAL on
+    every shape: empty doc, sub-window doc, exact-window doc, long text
+    with real cuts, non-ASCII codepoints, NULL doc (filtered), and a
+    non-default window/mask config."""
     import random
 
     rng = random.Random(11)
@@ -229,13 +228,28 @@ def test_cdc_chunks_kernel_matches_sql_twin(spark):
     )
     for kw in (dict(), dict(window=4, mask_mod=16)):
         kern = sorted(
-            tuple(r) for r in cdc_chunks(df, use_kernel=True, **kw).collect()
+            tuple(r) for r in cdc_chunks(df, **kw).collect()
         )
-        sql = sorted(
-            tuple(r) for r in cdc_chunks(df, use_kernel=False, **kw).collect()
+        ref = sorted(
+            tuple(r) for r in _cdc_chunks_column_path(df, **kw).collect()
         )
-        assert kern == sql, kw
+        assert kern == ref, kw
         assert len(kern) > len(texts)  # non-vacuous: real cuts happened
+
+
+def test_cdc_kernel_empty_and_all_null_batches(spark):
+    """An Arrow batch with no text (empty, or only NULLs) has a NaN
+    longest length; the kernel must size its power tables from 0, not
+    crash converting NaN to int."""
+    import pandas as pd
+
+    from yandex_tracker_exporter_spark.operators.dedup import _cdc_kernel
+
+    kern = _cdc_kernel(8, 64).func
+    assert len(kern(pd.Series([], dtype=object))) == 0
+    out = kern(pd.Series([None, None]))
+    assert len(out) == 2
+    assert out["chunk_idx"].isna().all()
 
 
 # ---------------------------------------------------------------------------

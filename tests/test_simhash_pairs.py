@@ -71,10 +71,9 @@ def test_salted_families_independent(spark):
 
 def test_kernel_and_expression_signatures_identical(spark):
     """The Arrow 62-bit signature kernel must be bit-identical to the
-    pure-expression fold on the corpus AND on tokenization edge cases
-    (leading/trailing/repeated whitespace, empty string, tabs)."""
-    from pyspark.sql import functions as F
-
+    two salted 31-bit ``simhash`` expression folds on the corpus AND on
+    tokenization edge cases (leading/trailing/repeated whitespace,
+    empty string, tabs, NULL)."""
     from yandex_tracker_exporter_spark.operators.dedup import (
         simhash62_signatures,
     )
@@ -101,14 +100,14 @@ def test_kernel_and_expression_signatures_identical(spark):
     )
     df = corpus.select("doc_id", "text").unionAll(edge)
     kern = {
-        (r.doc_id): (r.sim_lo, r.sim_hi)
-        for r in simhash62_signatures(df, use_kernel=True).collect()
+        r.doc_id: (r.sim_lo, r.sim_hi)
+        for r in simhash62_signatures(df).collect()
     }
-    expr = {
-        (r.doc_id): (r.sim_lo, r.sim_hi)
-        for r in simhash62_signatures(df, use_kernel=False).collect()
-    }
+    lo = simhash(df, bits=31).withColumnRenamed("simhash", "lo")
+    hi = simhash(df, bits=31, salt="#").withColumnRenamed("simhash", "hi")
+    expr = {r.doc_id: (r.lo, r.hi) for r in lo.join(hi, "doc_id").collect()}
     assert kern == expr
+    assert kern[100007] == (None, None)
 
 
 def test_max_hamming_above_band_guarantee_rejected(spark):

@@ -35,7 +35,8 @@ Blow-up construction (deterministic, join-consistent):
   density per vector stays what sf0.1 has.
 
 Usage: python tools/scale_check.py [factor] [runs]
-Writes /tmp/yte_scale_check/result.json and prints a markdown table.
+Writes /tmp/yte_scale_check/result_c{cpus}.json (cpus = SPARK_GRAFT_CPUS,
+default 32) and prints a markdown table.
 """
 
 from __future__ import annotations

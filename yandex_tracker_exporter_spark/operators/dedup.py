@@ -123,11 +123,6 @@ def _hash64(col: Column) -> Column:
     )
 
 
-def _qident(name: str) -> str:
-    """Backtick-quote a column name for the SQL fast paths."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _codepoints(col: Column) -> Column:
     """Codepoint array of a string ('' → [0], the codepoint fold identity).
 
@@ -667,9 +662,21 @@ def canonical_representatives(
     )
 
 
-def _simhash_value(content_col: str, bits: int, salt: str = "") -> Column:
-    """The simhash integer as a column expression (see :func:`simhash`);
-    exposed so multi-family signatures compute in ONE projection pass."""
+def simhash(
+    df: DataFrame,
+    content_col: str = "text",
+    id_col: str = "doc_id",
+    bits: int = 32,
+    salt: str = "",
+) -> DataFrame:
+    """Per-document SimHash over whitespace tokens (duplicates weighted).
+
+    bit_j(token) = j-th bit of the polynomial token hash; the simhash
+    sets bit j when the sum over tokens of (2*bit_j - 1) is positive.
+    ``salt`` (appended to each token before hashing) selects an
+    independent hash family — two salted 31-bit simhashes concatenate
+    into the 62-bit signature used by :func:`simhash_hamming_pairs`.
+    """
     tokens = F.split(F.col(content_col), r"\s+")
     if salt:
         token_hashes = F.transform(
@@ -705,33 +712,13 @@ def _simhash_value(content_col: str, bits: int, salt: str = "") -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return value
-
-
-def simhash(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 32,
-    salt: str = "",
-) -> DataFrame:
-    """Per-document SimHash over whitespace tokens (duplicates weighted).
-
-    bit_j(token) = j-th bit of the polynomial token hash; the simhash
-    sets bit j when the sum over tokens of (2*bit_j - 1) is positive.
-    ``salt`` (appended to each token before hashing) selects an
-    independent hash family — two salted 31-bit simhashes concatenate
-    into the 62-bit signature used by :func:`simhash_hamming_pairs`.
-    """
-    return df.select(
-        F.col(id_col), _simhash_value(content_col, bits, salt).alias("simhash")
-    )
+    return df.select(F.col(id_col), value.alias("simhash"))
 
 
 def _simhash62_kernel(salt: str = "#"):
     """Arrow-vectorized 62-bit simhash: per text, the plain and
     ``salt``-appended 31-bit simhashes in one pass. Bit-identical to
-    two :func:`_simhash_value` expression folds:
+    two :func:`simhash` expression folds (``bits=31``):
 
     - tokenization is Java-``\\s+`` split semantics (ASCII whitespace
       class, leading/trailing empties kept — Python ``re.split`` on the
@@ -746,8 +733,8 @@ def _simhash62_kernel(salt: str = "#"):
     Exists because interpreted HOF folds degrade in many-query sessions
     (megamorphic interpreter call sites): the expression pair fold
     measured ~1.1 s solo but 3.1-3.5 s inside the 81-query bench; the
-    kernel is stable either way. The expression path remains the
-    tested-equal fallback (tests/test_simhash_pairs.py)."""
+    kernel is stable either way. :func:`simhash` is its tested-equal
+    reference (tests/test_simhash_pairs.py)."""
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
     salt_cps = [ord(c) for c in salt]
 
@@ -794,20 +781,12 @@ def simhash62_signatures(
     content_col: str = "text",
     id_col: str = "doc_id",
     salt: str = "#",
-    use_kernel: bool = True,
 ) -> DataFrame:
-    """(id, sim_lo, sim_hi) 62-bit signatures — Arrow kernel by default,
-    pure-expression fold as the tested-equal fallback."""
-    if use_kernel:
-        kern = _simhash62_kernel(salt)
-        return df.select(
-            F.col(id_col), kern(F.col(content_col)).alias("_s")
-        ).select(id_col, F.col("_s.sim_lo"), F.col("_s.sim_hi"))
+    """(id, sim_lo, sim_hi) 62-bit signatures from the Arrow kernel."""
+    kern = _simhash62_kernel(salt)
     return df.select(
-        F.col(id_col),
-        _simhash_value(content_col, bits=31).alias("sim_lo"),
-        _simhash_value(content_col, bits=31, salt=salt).alias("sim_hi"),
-    )
+        F.col(id_col), kern(F.col(content_col)).alias("_s")
+    ).select(id_col, F.col("_s.sim_lo"), F.col("_s.sim_hi"))
 
 
 def _simhash_banded(sigs: DataFrame, id_col: str) -> DataFrame:
@@ -1282,11 +1261,11 @@ def _pow_mod_arr(base: int, n: int, p: int):
 
 
 def _cdc_kernel(window: int, mask_mod: int):
-    """Arrow-vectorized twin of the ``cdc_chunks`` expression pipeline
-    (r13, VERDICT r12 next-round #3; guide §4.2): the SQL path's
-    window-unrolled rolling hash and per-chunk ``aggregate`` fold are
-    interpreted HOF lambdas — O(n·window) boxed ops per doc outside
-    codegen. The kernel computes the identical integers in numpy:
+    """Arrow-vectorized ``cdc_chunks`` kernel (r13, guide §4.2). The
+    same chunking as an expression pipeline would run its rolling hash
+    and per-chunk ``aggregate`` fold as interpreted HOF lambdas —
+    O(n·window) boxed ops per doc outside codegen (4.3× the per-task
+    cost at sf0.1). The kernel computes the same integers in numpy:
 
     - rolling window hash per position: the same unrolled
       ``(h*B + c) % P`` fold ``_hashset_kernel`` uses (bit-identical —
@@ -1295,8 +1274,8 @@ def _cdc_kernel(window: int, mask_mod: int):
       ``H[k] = fold(codes[:k])``, ``fold(codes[s-1:e]) =
       (H[e] − H[s−1]·B^(e−s+1)) mod P`` — exact modular arithmetic,
       never floats, so equality with the fold is an identity, not an
-      approximation (pinned bit-exact by
-      test_cdc_chunks_kernel_matches_sql_twin on every junk shape).
+      approximation (pinned bit-exact against the column-expression
+      reference by test_cdc_chunks_sql_twin_matches_column_path).
 
     Output: one struct of four equal-length arrays per doc (chunk_idx,
     start, chunk_len, chunk_hash) — zipped and exploded JVM-side.
@@ -1311,7 +1290,9 @@ def _cdc_kernel(window: int, mask_mod: int):
     )
     def chunks(texts: pd.Series) -> pd.DataFrame:
         idx_out, start_out, len_out, hash_out = [], [], [], []
-        n_max = int(texts.str.len().max() or 0)
+        # NaN on an empty or all-NULL batch, and NaN is truthy
+        n_max = texts.str.len().max()
+        n_max = 0 if pd.isna(n_max) else int(n_max)
         pw = _pow_mod_arr(b, n_max, p)
         inv_pw = _pow_mod_arr(inv_b, n_max, p)
         for t in texts:
@@ -1370,7 +1351,6 @@ def cdc_chunks(
     id_col: str = "doc_id",
     window: int = CDC_WINDOW,
     mask_mod: int = CDC_MASK_MOD,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Content-defined chunking (the Rabin/FastCDC family): cut a
     document wherever the rolling ``window``-gram hash ≡ 0 (mod
@@ -1382,11 +1362,11 @@ def cdc_chunks(
     instead of at fixed offsets. Expected chunk size ≈ ``mask_mod``
     characters.
 
-    Entirely map-only (expressions over the materialized codepoint
-    array; one explode) — scan-bound at any scale, no shuffle. The
-    chunk key is the portable polynomial hash of the chunk text, so a
-    downstream exact-dedup groupBy on (chunk_hash, chunk_len) is the
-    sub-file dedup table.
+    Map-only (one Arrow kernel pass, see ``_cdc_kernel``, then one
+    explode) — scan-bound at any scale, no shuffle. The chunk key is
+    the portable polynomial hash of the chunk text, so a downstream
+    exact-dedup groupBy on (chunk_hash, chunk_len) is the sub-file
+    dedup table.
 
     Output: id, chunk_idx (1-based), start (1-based char), chunk_len,
     chunk_hash. Empty documents yield one zero-length chunk with the
@@ -1395,101 +1375,23 @@ def cdc_chunks(
     no content to chunk, and the unguarded expression chain fabricated
     one phantom all-NULL chunk row for it).
     """
-    # r12 batch 6 (guide §7.3): the whole expression pipeline renders
-    # as SQL strings parsed JVM-side — the Column/HOF-lambda build cost
-    # ~1,500 py4j round trips per call (the window-unrolled rolling
-    # hash inside a transform() lambda is the worst shape: every op a
-    # socket round trip). Identical expression trees — pure integer
-    # arithmetic, so equality is exact (pinned:
-    # tests/test_retrieval_chunking.py::test_cdc_chunks_sql_twin_matches_column_path).
     df = df.where(F.col(content_col).isNotNull())
-    if use_kernel:
-        # r13 EXECUTION twin, the DEFAULT (guide §4.2; VERDICT r12 #3):
-        # the SQL path's rolling hash + per-chunk aggregate() folds
-        # evaluate INTERPRETED per row (O(n·window) boxed lambda ops
-        # outside codegen); the kernel computes the same integers
-        # vectorized (bit-exact pin:
-        # test_cdc_chunks_kernel_matches_sql_twin). Paired A/B at
-        # sf0.1: per-TASK cost 4.3× lower (single-partition scan:
-        # best 0.661 vs 2.842 s), wall-clock ties at local[32] (idle
-        # cores hide the interpreted cost at 17 MB: 0.425 vs 0.395
-        # best) and wins at local[8] (0.468/0.511 vs 0.682/0.891
-        # best/med) — per-core throughput is what 100 TB pays for.
-        # The expression twin stays for deployments where Python
-        # workers, not JVM cores, are the scarce resource.
-        kern = _cdc_kernel(window, mask_mod)
-        base_k = df.select(F.col(id_col), kern(F.col(content_col)).alias("_c"))
-        zipped = base_k.select(
-            F.col(id_col),
-            F.explode(
-                F.arrays_zip(
-                    "_c.chunk_idx", "_c.start", "_c.chunk_len", "_c.chunk_hash"
-                )
-            ).alias("_ch"),
-        )
-        return zipped.select(
-            F.col(id_col),
-            F.col("_ch.chunk_idx").alias("chunk_idx"),
-            F.col("_ch.start").alias("start"),
-            F.col("_ch.chunk_len").alias("chunk_len"),
-            F.col("_ch.chunk_hash").alias("chunk_hash"),
-        )
-    content, ident = _qident(content_col), _qident(id_col)
-    codes_sql = (
-        f"transform(sequence(1, greatest(length({content}), 1)), "
-        f"i -> CAST(ascii(substring({content}, i, 1)) AS BIGINT))"
+    kern = _cdc_kernel(window, mask_mod)
+    base = df.select(F.col(id_col), kern(F.col(content_col)).alias("_c"))
+    zipped = base.select(
+        F.col(id_col),
+        F.explode(
+            F.arrays_zip(
+                "_c.chunk_idx", "_c.start", "_c.chunk_len", "_c.chunk_hash"
+            )
+        ).alias("_ch"),
     )
-    base = df.selectExpr(
-        ident,
-        f"{codes_sql} AS _codes",
-        f"length({content}) AS _n",
-    )
-
-    # rolling hash of the window starting at position i, unrolled
-    h = "get(_codes, i - 1)"
-    for j in range(1, window):
-        h = f"(({h} * {POLY_BASE} + get(_codes, i + {j} - 1)) % {MINHASH_PRIME})"
-
-    # candidate cut after the window ending at char i+window-1; -1 marks
-    # non-cuts and is stripped (array_remove), keeping positions aligned
-    cuts = (
-        f"CASE WHEN _n >= {window} THEN array_remove("
-        f"transform(sequence(1, greatest(_n - {window - 1}, 1)), "
-        f"i -> CASE WHEN {h} % {mask_mod} = 0 "
-        f"THEN CAST(i + {window - 1} AS BIGINT) "
-        "ELSE CAST(-1 AS BIGINT) END), -1) "
-        "ELSE CAST(array() AS ARRAY<BIGINT>) END"
-    )
-    ends = (
-        f"array_sort(array_distinct(concat({cuts}, "
-        "array(CAST(_n AS BIGINT)))))"
-    )
-    with_ends = base.selectExpr(ident, "_codes", f"{ends} AS _ends")
-    chunks = (
-        "transform(sequence(1, size(_ends)), j -> named_struct("
-        "'chunk_idx', CAST(j AS BIGINT), "
-        "'start', CASE WHEN j = 1 THEN CAST(1 AS BIGINT) "
-        "ELSE get(_ends, j - 2) + 1 END, "
-        "'chunk_len', get(_ends, j - 1) - "
-        "CASE WHEN j = 1 THEN CAST(0 AS BIGINT) "
-        "ELSE get(_ends, j - 2) END))"
-    )
-    exploded = with_ends.select(
-        F.col(id_col), F.col("_codes"), F.explode(F.expr(chunks)).alias("c")
-    ).selectExpr(
-        ident,
-        "_codes",
-        "c.chunk_idx AS chunk_idx",
-        "c.start AS start",
-        "c.chunk_len AS chunk_len",
-    )
-    chunk_hash = (
-        "aggregate(slice(_codes, CAST(start AS INT), "
-        "CAST(chunk_len AS INT)), CAST(0 AS BIGINT), "
-        f"(h, c) -> (h * {POLY_BASE} + c) % {MINHASH_PRIME})"
-    )
-    return exploded.selectExpr(
-        ident, "chunk_idx", "start", "chunk_len", f"{chunk_hash} AS chunk_hash"
+    return zipped.select(
+        F.col(id_col),
+        F.col("_ch.chunk_idx").alias("chunk_idx"),
+        F.col("_ch.start").alias("start"),
+        F.col("_ch.chunk_len").alias("chunk_len"),
+        F.col("_ch.chunk_hash").alias("chunk_hash"),
     )
 
 
@@ -1535,7 +1437,6 @@ def prefix_filter_jaccard_join(
     id_col: str = "doc_id",
     threshold_milli: int = 700,
     shingle_k: int = 12,
-    materialize_prefixes: bool = False,
 ) -> DataFrame:
     """EXACT thresholded set-similarity self-join via prefix filtering
     (Chaudhuri/Bayardo AllPairs): every pair with token-set Jaccard ≥ t
@@ -1608,31 +1509,7 @@ def prefix_filter_jaccard_join(
                 )
             ).alias("_pos", "_tok"),
         )
-        # `materialize_prefixes` (r12 batch 7, guide §2.4 then §1):
-        # `prefixes` feeds BOTH sides of the candidate self-join, so the
-        # subtree above — shingle explode, df-count aggregate +
-        # broadcast build, rarest-first collect_list sort, posexplode —
-        # executes TWICE without a barrier (the plan shows the operator
-        # chain duplicated per side). A localCheckpoint here computes it
-        # once — but three paired A/B rounds at sf0.1 all measured the
-        # barrier NEUTRAL-TO-WORSE (best 6.23 vs 5.72 s, p50 tie):
-        # materializing + re-reading the exploded prefix rows costs as
-        # much as recomputing them, because one copy rides inside the
-        # b-side BROADCAST build rather than a second full pass. Default
-        # stays streaming; the flag is for corpora with long documents
-        # (bigger prefix subtree, same narrow prefix rows) where the
-        # balance tips. Both paths byte-equal:
-        # test_prefix_join_barrier_twin_matches_streaming.
-        # ADVICE r12 caveat when the flag IS used: localCheckpoint
-        # blocks live in EXECUTOR storage with truncated lineage — on a
-        # non-local cluster an executor loss makes the join
-        # unrecoverable mid-query, and long-lived sessions that call
-        # this repeatedly accumulate cached blocks until context GC
-        # collects the DataFrame; prefer a real checkpoint dir (or
-        # unpersist after materializing the join) in such deployments.
-        )
-    if materialize_prefixes:
-        prefixes = prefixes.localCheckpoint(eager=False)
+    )
     a = prefixes.select(
         F.col("_id").alias("a_id"),
         F.col("_s").alias("_sa"),

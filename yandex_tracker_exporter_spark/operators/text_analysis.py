@@ -933,7 +933,6 @@ def sorted_neighborhood_pairs(
 def bigram_lm(
     df: DataFrame,
     text_col: str = "text",
-    materialize_bigrams: bool = False,
 ) -> DataFrame:
     """Add-one-smoothed bigram language model in exact milli units:
     P(w2|w1) ≈ (c12 + 1)·1000 div (c1 + V) — the LM statistic behind
@@ -955,18 +954,9 @@ def bigram_lm(
     bigrams = df.select(toks.alias("_t")).select(
         F.explode(_bigram_structs(F.col("_t"))).alias("bg")
     ).where(F.col("bg.w2").isNotNull()).select("bg.w1", "bg.w2")
-    # barrier TRADE-OFF (r12, guide §2.4): the bigram relation feeds
-    # BOTH count aggregations (c12 and the prefix counts) — a barrier
-    # would tokenize once instead of twice, but it materializes the
-    # exploded (w1, w2) STRING stream, which is BIGGER than the text it
-    # came from; paired in-session A/B at sf0.1 measured the barrier
-    # LOSING (ckpt 0.77/1.18 best/med vs streaming 0.65/0.79) — writing
-    # exploded bigrams costs more than the second map-side tokenize
-    # feeding a partial aggregation. Default is therefore streaming at
-    # every scale; the flag stays for corpora whose tokenize is the
-    # bottleneck (e.g. much longer documents per row).
-    if materialize_bigrams:
-        bigrams = bigrams.localCheckpoint(eager=False)
+    # Streams into both count aggregations: a barrier would write the
+    # exploded (w1, w2) strings, which outweigh the text, and measured
+    # slower than tokenizing twice (r12 A/B at sf0.1).
     vocab = (
         df.select(F.explode(toks).alias("w"))
         .agg(F.count_distinct("w").alias("v"))
@@ -1126,7 +1116,6 @@ def term_cooccurrence_pmi(
     text_col: str = "text",
     id_col: str = "doc_id",
     top_k: int = 20,
-    materialize_docs: bool = True,
 ) -> DataFrame:
     """Document-level co-occurrence PMI (milli-rational) for the top-k
     corpus terms — the association statistic behind phrase mining and
@@ -1150,19 +1139,14 @@ def term_cooccurrence_pmi(
     Output: term_a < term_b, c_a, c_b, c_ab, n_docs, pmi_milli.
     """
     toks = F.array_sort(F.array_distinct(_tokens(F.col(text_col))))
-    # barrier TRADE-OFF: the tokenized doc-set relation feeds the
-    # frequency agg AND the per-doc intersect pass — without the
-    # barrier every document is tokenized twice (two full corpus
-    # scans). But the barrier is a MEMORY_AND_DISK materialization of
-    # the ENTIRE tokenized corpus on executors: fine at bench scale,
-    # a cluster-storage-sized persist at the module's 100 TB target.
-    # `materialize_docs=False` keeps the plan purely streaming
-    # (re-tokenize instead of persist) — at 100 TB, re-reading + two
-    # map-side tokenizations is usually cheaper than spilling the
-    # corpus to executor disks; flip it when input >> cluster memory.
-    docs = df.select(F.col(id_col).alias("_rid"), toks.alias("_set"))
-    if materialize_docs:
-        docs = docs.localCheckpoint(eager=False)
+    # barrier: the tokenized doc-set relation feeds the frequency agg
+    # AND the per-doc intersect pass — without it every document is
+    # tokenized twice (two full corpus scans). The cost is an executor
+    # materialization of the whole tokenized corpus.
+    docs = (
+        df.select(F.col(id_col).alias("_rid"), toks.alias("_set"))
+        .localCheckpoint(eager=False)
+    )
     present = docs.select(F.explode("_set").alias("term"))
     dfreq = present.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     top = (
