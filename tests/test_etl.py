@@ -94,6 +94,62 @@ def test_transform_changelog_flatten(spark, raw_changelog):
     assert all(r["actor"] == "actor@example.com" for r in status_rows)
 
 
+def test_transform_changelog_construction_py4j_ceiling(spark, raw_changelog):
+    """Building ``transform_changelog`` sends a fixed number of py4j
+    commands: its kernels are SQL text, one ``F.expr`` each. The
+    Column-API kernels sent ~2,500 (~1,200 per changelog value)."""
+    transform_changelog(raw_changelog)  # first call resolves JVM classes
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        transform_changelog(raw_changelog)
+    finally:
+        del client.send_command
+    assert 0 < len(sent) <= 60, len(sent)
+
+
+def test_moved_event_ties_pick_the_same_row(spark, raw_issues):
+    """Two IssueMoved events at the same instant: the pick must not
+    depend on input order or partitioning (a retried task may see
+    either), so moved_by is the first actor by name."""
+    from yandex_tracker_exporter_spark.schemas import RAW_CHANGELOG_SCHEMA
+
+    def moved(ts, email):
+        return {
+            "issue_key": "DEV-1",
+            "queue": "DEV",
+            "updatedAt": ts,
+            "type": "IssueMoved",
+            "transport": "front",
+            "updatedBy": None if email is None else {"email": email, "name": "M"},
+            "fields": [],
+        }
+
+    late = "2023-05-04T09:30:00.000000+0000"
+    events = [
+        moved("2023-05-03T09:30:00.000000+0000", "Early@example.com"),
+        moved(late, "Zed@example.com"),
+        moved(late, None),
+        moved(late, "Amy@example.com"),
+        moved(late, "Mia@example.com"),
+    ]
+    issues = raw_issues.where(F.col("key") == "DEV-1")
+    picks = set()
+    for rows in (events, events[::-1]):
+        for n in (1, 8):
+            changelog = spark.createDataFrame(rows, RAW_CHANGELOG_SCHEMA).repartition(n)
+            row = transform_issues(issues, changelog).collect()[0]
+            picks.add((row["was_moved"], row["moved_at"], row["moved_by"]))
+    assert picks == {(True, dt.datetime(2023, 5, 4, 9, 30), "amy@example.com")}
+
+
 def test_run_etl_incremental_upsert(spark, raw_issues, raw_changelog, tmp_path):
     out = str(tmp_path / "warehouse")
     state = FileStateStore(str(tmp_path / "state.json"))

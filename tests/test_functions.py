@@ -2,7 +2,10 @@
 ``tests/test_helpers.py`` (its only executable spec of P2-P9 semantics).
 """
 
+import datetime as _dt
+
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.functions import (
@@ -16,8 +19,13 @@ from yandex_tracker_exporter_spark.functions import (
     to_snake_case,
 )
 from yandex_tracker_exporter_spark.functions.changelog import (
+    MAX_TEXT_LEN,
     TEXT_TOO_LONG_SENTINEL,
     extract_changelog_value,
+)
+from yandex_tracker_exporter_spark.functions.datetimes import (
+    TRACKER_DT_FORMAT,
+    TRACKER_DT_FORMAT_NOTZ,
 )
 
 
@@ -87,7 +95,7 @@ def test_parse_tracker_datetime(spark):
         (None,),
     ]
     col = F.date_format(
-        parse_tracker_datetime(F.col("value")), "yyyy-MM-dd'T'HH:mm:ss.SSS"
+        parse_tracker_datetime("value"), "yyyy-MM-dd'T'HH:mm:ss.SSS"
     )
     got = _eval(spark, col, rows)
     assert got == [
@@ -108,7 +116,7 @@ def test_parse_tracker_datetime_tz_display(spark):
     rows = [("2023-01-01T10:00:00.123+0000",)]
     col = F.date_format(
         F.convert_timezone(
-            F.lit("UTC"), F.lit("Europe/Moscow"), parse_tracker_datetime(F.col("value"))
+            F.lit("UTC"), F.lit("Europe/Moscow"), parse_tracker_datetime("value")
         ),
         "yyyy-MM-dd'T'HH:mm:ss.SSS",
     )
@@ -140,7 +148,7 @@ def test_format_display_datetime_reference_vectors(spark):
     ]
     for value, tz, date_only, expected in cases:
         col = format_display_datetime(
-            parse_tracker_datetime(F.col("value")), tz, date_only=date_only
+            parse_tracker_datetime("value"), tz, date_only=date_only
         )
         assert _eval(spark, col, [(value,)]) == [expected], (value, tz, date_only)
 
@@ -250,12 +258,91 @@ def test_business_seconds_holiday(spark):
     assert df.select(col).collect()[0][0] == 0
 
 
+def _business_seconds_ref(
+    start: Column,
+    end: Column,
+    workdays: tuple[int, ...] = (0, 1, 2, 3, 4),
+    hour_start: int = 9,
+    hour_end: int = 22,
+    holiday_dates: tuple[str, ...] = (),
+) -> Column:
+    """Column-API reference of ``business_seconds``: the same closed
+    form built op by op (~800 py4j round trips), kept as the reference
+    the SQL-text library kernel must equal."""
+    s0, e0 = start, end
+    # abs() semantics: order the endpoints.
+    s = F.least(s0, e0)
+    e = F.greatest(s0, e0)
+
+    window_len = (hour_end - hour_start) * 3600
+
+    # Spark weekday(): Mon=0..Sun=6 — same numbering as the config.
+    workdays_arr = F.array(*[F.lit(d) for d in workdays])
+    holidays_arr = F.array(*[F.lit(d).cast("date") for d in holiday_dates])
+
+    def day_overlap(day: Column) -> Column:
+        """Boundary-day clip: full [s, e) ∩ [day+hs, day+he), gated on
+        workday/holiday — identical to expanding that single day."""
+        window_start = day + F.expr(f"interval {hour_start} hours")
+        window_end = day + F.expr(f"interval {hour_end} hours")
+        overlap = F.unix_timestamp(F.least(e, window_end)) - F.unix_timestamp(
+            F.greatest(s, window_start)
+        )
+        is_workday = F.array_contains(workdays_arr, F.weekday(day))
+        not_holiday = ~F.coalesce(
+            F.array_contains(holidays_arr, F.to_date(day)), F.lit(False)
+        )
+        return F.when(is_workday & not_holiday, F.greatest(overlap, F.lit(0))).otherwise(
+            F.lit(0).cast("long")
+        )
+
+    d0, d1 = F.to_date(s), F.to_date(e)
+    # interior days are (d0, d1) EXCLUSIVE: [a .. a+n_int-1]
+    a = F.date_add(d0, 1)
+    n_int = F.datediff(d1, a)  # count of interior days; <= 0 means none
+    wa = F.weekday(a)
+
+    # count of interior days whose weekday == w, closed form:
+    # positions i in [0, n_int) with (wa + i) % 7 == w
+    def weekday_count(w: int) -> Column:
+        r = ((F.lit(w) - wa) % 7 + 7) % 7
+        return F.when(
+            n_int > r, F.floor((n_int - 1 - r) / 7) + 1
+        ).otherwise(F.lit(0)).cast("long")
+
+    interior_workdays = None
+    for w in workdays:
+        term = weekday_count(w)
+        interior_workdays = term if interior_workdays is None else interior_workdays + term
+    if interior_workdays is None:
+        interior_workdays = F.lit(0).cast("long")
+
+    # interior holidays that would otherwise count as workdays: the
+    # holiday list is a config literal, so its weekday is known in Python
+    interior_holidays = F.lit(0).cast("long")
+    for h in holiday_dates:
+        if _dt.date.fromisoformat(h).weekday() not in workdays:
+            continue
+        hd = F.lit(h).cast("date")
+        interior_holidays = interior_holidays + F.when(
+            (hd > d0) & (hd < d1), F.lit(1)
+        ).otherwise(F.lit(0)).cast("long")
+
+    d0t, d1t = F.date_trunc("DAY", s), F.date_trunc("DAY", e)
+    total = (
+        day_overlap(d0t)
+        + F.when(d1 > d0, day_overlap(d1t)).otherwise(F.lit(0).cast("long"))
+        + F.lit(window_len).cast("long") * (interior_workdays - interior_holidays)
+    )
+    return F.when(s.isNull() | e.isNull(), F.lit(None).cast("long")).otherwise(total)
+
+
 def test_business_seconds_sql_twin_matches_column_path(spark):
-    """r12 batch 6: string args take a single-parse SQL fast path. It
-    must equal the Column-builder path (reached via Column args) on
-    every shape — NULLs, reversed, weekend-only, multi-year spans,
-    holidays incl. a weekend holiday, hour-boundary grazing — and on a
-    non-default workday/hour config. All-integer arithmetic, so
+    """r12 batch 6: the library renders the closed form as SQL text. It
+    must equal the Column-API reference above on every shape —
+    NULLs, reversed, weekend-only, multi-year spans, holidays incl. a
+    weekend holiday, hour-boundary grazing — and on a non-default
+    workday/hour config. All-integer arithmetic, so
     equality is exact."""
     import datetime as dt
 
@@ -282,7 +369,7 @@ def test_business_seconds_sql_twin_matches_column_path(spark):
     for kw in configs:
         out = df.select(
             business_seconds("start", "end", **kw).alias("s"),
-            business_seconds(F.col("start"), F.col("end"), **kw).alias("c"),
+            _business_seconds_ref(F.col("start"), F.col("end"), **kw).alias("c"),
         ).collect()
         for r in out:
             assert r.s == r.c, (kw, r)
@@ -340,8 +427,173 @@ def test_extract_changelog_value(spark):
         ('{"other": 1}', '{"other": 1}'),
         ('["a", "b"]', "a, b"),
     ]
-    got = _eval(spark, extract_changelog_value(F.col("value")), [(r[0],) for r in rows])
+    got = _eval(spark, extract_changelog_value("value"), [(r[0],) for r in rows])
     assert got == [r[1] for r in rows]
+
+
+# --- Column-API references of the SQL-text datetime and changelog
+# kernels: the expression each kernel renders, built op by op (~100 and
+# ~1,200 py4j round trips per call) and without the first-character gate.
+def _parse_tracker_datetime_ref(c: Column) -> Column:
+    return F.coalesce(
+        F.try_to_timestamp(c, F.lit(TRACKER_DT_FORMAT)),
+        F.try_to_timestamp(c, F.lit(TRACKER_DT_FORMAT_NOTZ)),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSZ")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSS")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssZ")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd HH:mm:ss")),
+        F.try_to_timestamp(c, F.lit("yyyy-MM-dd")),
+    )
+
+
+def _normalize_scalar_string_ref(c: Column) -> Column:
+    """The str branch: try datetime reformat, else length-guard."""
+    parsed = _parse_tracker_datetime_ref(c)
+    reformatted = F.date_format(parsed, "yyyy-MM-dd'T'HH:mm:ss.SSS")
+    return (
+        F.when(parsed.isNotNull(), reformatted)
+        .when(F.length(c) > MAX_TEXT_LEN, F.lit(TEXT_TOO_LONG_SENTINEL))
+        .otherwise(c)
+    )
+
+
+def _extract_object_ref(c: Column) -> Column:
+    """Reference-object extraction: key > lower(email) > name > id; other
+    objects pass through as JSON text."""
+    key = F.get_json_object(c, "$.key")
+    email = F.lower(F.get_json_object(c, "$.email"))
+    name = F.get_json_object(c, "$.name")
+    id_ = F.get_json_object(c, "$.id")
+    extracted = F.coalesce(key, email, name, id_)
+    return F.when(extracted.isNotNull(), extracted).otherwise(c)
+
+
+def _extract_changelog_value_ref(c: Column, _depth: int = 2) -> Column:
+    first = F.substring(F.ltrim(c), 1, 1)
+
+    scalar_string = _normalize_scalar_string_ref(F.get_json_object(c, "$"))
+
+    if _depth > 0:
+        # list branch: explode-free recursive transform + comma-join.
+        # from_json to array<string> keeps each element's raw JSON text.
+        elements = F.from_json(c, "array<string>")
+        joined = F.array_join(
+            F.transform(elements, lambda x: _extract_changelog_value_ref(x, _depth - 1)),
+            ", ",
+        )
+    else:
+        joined = c
+
+    return (
+        F.when(c.isNull() | (c == "null"), F.lit(""))
+        .when(first == "[", joined)
+        .when(first == "{", _extract_object_ref(c))
+        .when(first == '"', scalar_string)
+        # bare literal (number or unquoted string): same scalar treatment —
+        # numbers survive it unchanged (datetime parse fails, length ≤ 100)
+        .otherwise(_normalize_scalar_string_ref(c))
+    )
+
+
+_DT_VALUES = [
+    # the eleven layouts
+    "2023-01-01T10:00:00.123456+0300",
+    "2023-01-01T10:00:00.123456",
+    "2023-01-01T10:00:00.123+0300",
+    "2023-01-01T10:00:00.123",
+    "2023-01-01T10:00:00+0300",
+    "2023-01-01T10:00:00",
+    "2023-01-01T10:00:00.123456Z",
+    "2023-01-01T10:00:00.123+03:00",
+    "2023-01-01T10:00:00Z",
+    "2023-01-01 10:00:00",
+    "2023-01-01",
+    # signed and wide years, full-width and other non-ASCII digits
+    "+2023-01-01",
+    "-2023-01-01",
+    "+12023-01-01T10:00:00",
+    "-0001-12-31 23:59:59",
+    "２０２３-０１-０１",
+    "٢٠٢٣-٠١-٠١",
+    # whitespace around a datetime
+    " 2023-01-01",
+    "\t2023-01-01T10:00:00",
+    "2023-01-01 ",
+]
+_ADVERSARIAL_VALUES = _DT_VALUES + [
+    "",
+    "null",
+    None,
+    " null",
+    "Testing",
+    "42",
+    "-7",
+    "+3",
+    "3.14",
+    "1e5",
+    "20230101",
+    "x" * 150,
+    "2023-01-01" + "x" * (MAX_TEXT_LEN + 1),
+    '"' + "y" * (MAX_TEXT_LEN + 1) + '"',
+    '"Testing"',
+    '"2023-01-01T10:00:00.123+0300"',
+    '"2023-01-01"',
+    '" 2023-01-01"',
+    '"+12023-01-01T10:00:00"',
+    ' "quoted after a space"',
+    '"it\'s"',
+    '{"key": "K-1", "name": "n"}',
+    '{"email": "A@B.c"}',
+    '{"name": "Sprint 1"}',
+    '{"id": 5}',
+    '{"display": "x", "id": "7"}',
+    '{"other": 1}',
+    "{}",
+    ' {"key": "K-2"}',
+    "{bad json",
+    "[]",
+    '["a", "b"]',
+    '[["a", "b"], "c"]',
+    '[[["a", "2023-01-01"]], "b"]',
+    '[[[["deep"]]]]',
+    '[{"key": "K"}, "2023-01-01T10:00:00Z", null, 42, "Testing"]',
+    '  ["x", {"email": "E@F.g"}]',
+    "[bad",
+]
+
+
+def test_tracker_kernels_match_column_references(spark):
+    """The SQL-text kernels equal their Column-API references on
+    adversarial values, with ANSI mode off, on, and on with double-quoted
+    identifiers (so a double-quoted literal in the SQL text would turn
+    into a column name and fail)."""
+    df = spark.createDataFrame([(v,) for v in _ADVERSARIAL_VALUES], "value string")
+    keys = ("spark.sql.ansi.enabled", "spark.sql.ansi.doubleQuotedIdentifiers")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for ansi, dq in (("false", "false"), ("true", "false"), ("true", "true")):
+            spark.conf.set(keys[0], ansi)
+            spark.conf.set(keys[1], dq)
+            out = df.select(
+                "value",
+                F.unix_micros(parse_tracker_datetime("value")).alias("p"),
+                F.unix_micros(_parse_tracker_datetime_ref(F.col("value"))).alias("p_ref"),
+                extract_changelog_value("value").alias("e"),
+                _extract_changelog_value_ref(F.col("value")).alias("e_ref"),
+            ).collect()
+            assert len(out) == len(_ADVERSARIAL_VALUES)
+            for r in out:
+                assert (r.p, r.e) == (r.p_ref, r.e_ref), (ansi, dq, r)
+            # non-vacuous: every layout parses, and so do the signed years
+            parsed = {r.value for r in out if r.p is not None}
+            assert set(_DT_VALUES[:11]) | {"-2023-01-01", "+12023-01-01T10:00:00"} <= parsed
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_chunk_tokens_boundaries(spark):

@@ -34,8 +34,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.config import DEFAULT_CONFIG, EngineConfig
-from yandex_tracker_exporter_spark.functions.changelog import extract_changelog_value
-from yandex_tracker_exporter_spark.functions.datetimes import parse_tracker_datetime
+from yandex_tracker_exporter_spark.functions.changelog import extract_changelog_value_sql
+from yandex_tracker_exporter_spark.functions.datetimes import (
+    parse_tracker_datetime,
+    parse_tracker_datetime_sql,
+)
 from yandex_tracker_exporter_spark.functions.text import string_normalize, to_snake_case
 from yandex_tracker_exporter_spark.operators.sessionize import (
     closed_at_refinement,
@@ -132,6 +135,8 @@ def _apply_moved_events(
 
     The reference overwrites the fields on every moved event in loop
     order (``issue.py:162-167``) — "last event wins" = max event time.
+    Moves at the same instant go to the first actor by name, so a retried
+    task or a different input order picks the same row.
     """
     moved = (
         raw_changelog.where(F.col("type") == config.moved_event_type)
@@ -143,7 +148,9 @@ def _apply_moved_events(
         .withColumn(
             "_rn",
             F.row_number().over(
-                Window.partitionBy("issue_key").orderBy(F.col("_moved_at").desc())
+                Window.partitionBy("issue_key").orderBy(
+                    F.col("_moved_at").desc(), F.col("_moved_by").asc_nulls_last()
+                )
             ),
         )
         .where(F.col("_rn") == 1)
@@ -181,33 +188,32 @@ def transform_changelog(
 
     Explode each event's field changes to one row per (event, field) and
     P9-normalize the polymorphic values; F8 drops rows with no field
-    name or both values empty (``issue.py:149-151``).
+    name or both values empty (``issue.py:149-151``). Built from SQL
+    text, so construction costs a few dozen py4j round trips whatever the
+    size of the kernels.
     """
-    exploded = raw_changelog.select(
+    exploded = raw_changelog.selectExpr(
         "issue_key",
-        F.col("queue"),
-        parse_tracker_datetime("updatedAt").alias("event_time"),
-        F.col("type").alias("event_type"),
+        "queue",
+        f"{parse_tracker_datetime_sql('updatedAt')} AS event_time",
+        "type AS event_type",
         "transport",
-        F.coalesce(
-            _low(F.col("updatedBy.email")), F.col("updatedBy.name"), F.lit("")
-        ).alias("actor"),
-        F.explode("fields").alias("change"),
+        "coalesce(lower(updatedBy.email), updatedBy.name, '') AS actor",
+        "explode(fields) AS change",
     )
-    normalized = exploded.select(
+    normalized = exploded.selectExpr(
         "issue_key",
         "queue",
         "event_time",
         "event_type",
         "transport",
         "actor",
-        F.col("change.field.name").alias("changed_field"),
-        extract_changelog_value(F.col("change.from")).alias("changed_from"),
-        extract_changelog_value(F.col("change.to")).alias("changed_to"),
+        "change.field.name AS changed_field",
+        f"{extract_changelog_value_sql('change.`from`')} AS changed_from",
+        f"{extract_changelog_value_sql('change.`to`')} AS changed_to",
     )
     return normalized.where(
-        F.col("changed_field").isNotNull()
-        & ((F.col("changed_from") != "") | (F.col("changed_to") != ""))
+        "changed_field IS NOT NULL AND (changed_from != '' OR changed_to != '')"
     )
 
 

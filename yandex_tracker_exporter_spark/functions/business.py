@@ -12,6 +12,9 @@ The reference computes it per-row in Python with ``businesstimedelta`` +
    rather than expanded. Entirely JVM-side, whole-stage codegen, no
    arrays, no shuffle, no Python — and constant cost for any span
    (the round-2 ``sequence()`` expansion nulled out past ~3 years).
+   It is rendered as SQL text and parsed by one ``F.expr``; the
+   Column-API form of the same closed form is the test-side
+   reference in ``tests/test_functions.py``.
 
 2. ``business_seconds_pandas_udf`` — Arrow-vectorized pandas UDF with
    the same day-clipping arithmetic in numpy, kept as a reference
@@ -54,8 +57,8 @@ def _business_seconds_sql(
     instead of ~800 Column-op round trips (r12 batch 6: construction
     profile showed 1,655 py4j round trips for the business-hours
     query, ~0.45 s of pure driver latency inside every timed bench
-    sample). Same expression shape as the Column path; every term is
-    integer/date arithmetic so results are exactly equal (pinned:
+    sample). Every term is integer/date arithmetic, so results equal
+    the test-side Column-API reference exactly (pinned:
     tests/test_functions.py::test_business_seconds_sql_twin_matches_column_path).
     """
     import datetime as _dt
@@ -128,9 +131,8 @@ def _business_seconds_sql(
     )
     # guard on s/e (least/greatest), NOT the raw columns: Spark's
     # least/greatest SKIP nulls, so a one-sided NULL leaves s = e =
-    # the non-null endpoint and the Column path computes 0 for it —
-    # the guard only fires when BOTH endpoints are NULL. The twin must
-    # reproduce that exactly (caught by the twin pin test).
+    # the non-null endpoint and the closed form computes 0 for it —
+    # the guard only fires when BOTH endpoints are NULL.
     return (
         f"CASE WHEN {s} IS NULL OR {e} IS NULL "
         f"THEN CAST(NULL AS BIGINT) ELSE {total} END"
@@ -138,8 +140,8 @@ def _business_seconds_sql(
 
 
 def business_seconds(
-    start: Column | str,
-    end: Column | str,
+    start: str,
+    end: str,
     workdays: tuple[int, ...] = (0, 1, 2, 3, 4),
     hour_start: int = 9,
     hour_end: int = 22,
@@ -147,90 +149,14 @@ def business_seconds(
 ) -> Column:
     """Seconds of [start, end) that fall inside business hours.
 
-    ``workdays`` uses Python weekday numbering (Mon=0..Sun=6) to match
-    the reference config (``config.py:193``). Closed-form: O(1) per row
-    for any interval width — no span cap.
-
-    String column names take the SQL fast path (one JVM parse);
-    Column inputs keep the expression-builder path. Equal results
-    pinned by test_business_seconds_sql_twin_matches_column_path.
+    ``start`` and ``end`` are column names. ``workdays`` uses Python
+    weekday numbering (Mon=0..Sun=6) to match the reference config
+    (``config.py:193``). Closed-form: O(1) per row for any interval
+    width — no span cap.
     """
-    import datetime as _dt
-
-    if isinstance(start, str) and isinstance(end, str):
-        return F.expr(
-            _business_seconds_sql(
-                start, end, workdays, hour_start, hour_end, holiday_dates
-            )
-        )
-
-    s0 = F.col(start) if isinstance(start, str) else start
-    e0 = F.col(end) if isinstance(end, str) else end
-    # abs() semantics: order the endpoints.
-    s = F.least(s0, e0)
-    e = F.greatest(s0, e0)
-
-    window_len = (hour_end - hour_start) * 3600
-
-    # Spark weekday(): Mon=0..Sun=6 — same numbering as the config.
-    workdays_arr = F.array(*[F.lit(d) for d in workdays])
-    holidays_arr = F.array(*[F.lit(d).cast("date") for d in holiday_dates])
-
-    def day_overlap(day: Column) -> Column:
-        """Boundary-day clip: full [s, e) ∩ [day+hs, day+he), gated on
-        workday/holiday — identical to expanding that single day."""
-        window_start = day + F.expr(f"interval {hour_start} hours")
-        window_end = day + F.expr(f"interval {hour_end} hours")
-        overlap = F.unix_timestamp(F.least(e, window_end)) - F.unix_timestamp(
-            F.greatest(s, window_start)
-        )
-        is_workday = F.array_contains(workdays_arr, F.weekday(day))
-        not_holiday = ~F.coalesce(
-            F.array_contains(holidays_arr, F.to_date(day)), F.lit(False)
-        )
-        return F.when(is_workday & not_holiday, F.greatest(overlap, F.lit(0))).otherwise(
-            F.lit(0).cast("long")
-        )
-
-    d0, d1 = F.to_date(s), F.to_date(e)
-    # interior days are (d0, d1) EXCLUSIVE: [a .. a+n_int-1]
-    a = F.date_add(d0, 1)
-    n_int = F.datediff(d1, a)  # count of interior days; <= 0 means none
-    wa = F.weekday(a)
-
-    # count of interior days whose weekday == w, closed form:
-    # positions i in [0, n_int) with (wa + i) % 7 == w
-    def weekday_count(w: int) -> Column:
-        r = ((F.lit(w) - wa) % 7 + 7) % 7
-        return F.when(
-            n_int > r, F.floor((n_int - 1 - r) / 7) + 1
-        ).otherwise(F.lit(0)).cast("long")
-
-    interior_workdays = None
-    for w in workdays:
-        term = weekday_count(w)
-        interior_workdays = term if interior_workdays is None else interior_workdays + term
-    if interior_workdays is None:
-        interior_workdays = F.lit(0).cast("long")
-
-    # interior holidays that would otherwise count as workdays: the
-    # holiday list is a config literal, so its weekday is known in Python
-    interior_holidays = F.lit(0).cast("long")
-    for h in holiday_dates:
-        if _dt.date.fromisoformat(h).weekday() not in workdays:
-            continue
-        hd = F.lit(h).cast("date")
-        interior_holidays = interior_holidays + F.when(
-            (hd > d0) & (hd < d1), F.lit(1)
-        ).otherwise(F.lit(0)).cast("long")
-
-    d0t, d1t = F.date_trunc("DAY", s), F.date_trunc("DAY", e)
-    total = (
-        day_overlap(d0t)
-        + F.when(d1 > d0, day_overlap(d1t)).otherwise(F.lit(0).cast("long"))
-        + F.lit(window_len).cast("long") * (interior_workdays - interior_holidays)
+    return F.expr(
+        _business_seconds_sql(start, end, workdays, hour_start, hour_end, holiday_dates)
     )
-    return F.when(s.isNull() | e.isNull(), F.lit(None).cast("long")).otherwise(total)
 
 
 def business_seconds_pandas_udf(

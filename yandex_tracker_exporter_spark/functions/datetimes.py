@@ -5,6 +5,11 @@ re-parses them at every step (``helpers.py:120-146``); here timestamps
 are real ``TimestampType`` end-to-end and formatting happens only at the
 edges. The session timezone is UTC (set in ``session.py``), matching the
 reference's default storage timezone.
+
+``parse_tracker_datetime`` is rendered as SQL text and parsed JVM-side
+by one ``F.expr``: a Column-API chain of the same expression costs
+~100 py4j round trips per call. Its test-side Column-API reference
+lives in ``tests/test_functions.py``.
 """
 
 from __future__ import annotations
@@ -21,32 +26,61 @@ TRACKER_DT_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSZ"
 #: missing (``helpers.py:136-138``).
 TRACKER_DT_FORMAT_NOTZ = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
+#: Layouts ``parse_tracker_datetime`` tries, in order. The XXX arms take
+#: a literal 'Z' and colon offsets ('+03:00'), both of which Python's %z
+#: (the reference parser) accepts since 3.7; the Spark 'Z' pattern only
+#: matches '+HHMM' forms.
+TRACKER_DT_PATTERNS: tuple[str, ...] = (
+    TRACKER_DT_FORMAT,
+    TRACKER_DT_FORMAT_NOTZ,
+    "yyyy-MM-dd'T'HH:mm:ss.SSSZ",
+    "yyyy-MM-dd'T'HH:mm:ss.SSS",
+    "yyyy-MM-dd'T'HH:mm:ssZ",
+    "yyyy-MM-dd'T'HH:mm:ss",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
+    "yyyy-MM-dd'T'HH:mm:ssXXX",
+    "yyyy-MM-dd HH:mm:ss",
+    "yyyy-MM-dd",
+)
 
-def parse_tracker_datetime(col: Column | str) -> Column:
+#: Every pattern above starts with the ``yyyy`` year field, which only
+#: matches an ASCII digit or a year sign first: no other value can parse.
+_DT_FIRST_CHARS = "0123456789+-"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a single-quoted SQL string literal. Never a
+    double-quoted one: under ``spark.sql.ansi.doubleQuotedIdentifiers``
+    that would name a column."""
+    return "'" + value.replace("'", "''") + "'"
+
+
+def parse_tracker_datetime_sql(expr: str) -> str:
+    """SQL text of :func:`parse_tracker_datetime` over the SQL
+    expression ``expr``.
+
+    The arms run only when the first character can start a year: a value
+    that is not a datetime (most changelog values are status names) would
+    otherwise pay eleven failing parses.
+    """
+    first = ", ".join(sql_string(ch) for ch in _DT_FIRST_CHARS)
+    arms = ", ".join(
+        f"try_to_timestamp({expr}, {sql_string(p)})" for p in TRACKER_DT_PATTERNS
+    )
+    return f"CASE WHEN substr({expr}, 1, 1) IN ({first}) THEN coalesce({arms}) END"
+
+
+def parse_tracker_datetime(expr: str) -> Column:
     """Parse a Tracker API datetime string to a UTC timestamp (P4).
 
-    Accepts offset-suffixed and naive strings (naive = UTC), plus plain
-    dates / second-precision strings as a lenient fallback — the
-    reference funnels every datetime through one strptime and a handful
-    of formats appear in changelog values.
+    ``expr`` is SQL expression text: a column name (``"updatedAt"``) or
+    a path (``"fields[1].`from`"``). Accepts offset-suffixed and naive
+    strings (naive = UTC), plus plain dates / second-precision strings
+    as a lenient fallback — the reference funnels every datetime through
+    one strptime and a handful of formats appear in changelog values.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(
-        F.try_to_timestamp(c, F.lit(TRACKER_DT_FORMAT)),
-        F.try_to_timestamp(c, F.lit(TRACKER_DT_FORMAT_NOTZ)),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSZ")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSS")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssZ")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-        # XXX arms: literal 'Z' and colon offsets ('+03:00'), both of
-        # which Python's %z (the reference parser) accepts since 3.7 —
-        # the Spark 'Z' pattern only matches '+HHMM' forms
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd HH:mm:ss")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd")),
-    )
+    return F.expr(parse_tracker_datetime_sql(expr))
 
 
 def format_display_datetime(

@@ -94,6 +94,47 @@ def _status_transition_events(
     )
 
 
+def _transition_intervals(
+    changelog: DataFrame, issues: DataFrame | None, config: EngineConfig
+) -> DataFrame:
+    """Status transitions plus their interval: ``_start_ts``, ``_end_ts``
+    and the F8 keep flag ``_has_interval`` (both endpoints parse).
+
+    The initial-status transition has a null ``fields[1].from`` and
+    starts at the issue's ``createdAt`` (``issue.py:185``), joined
+    broadcast since it is only (key, createdAt); ``_end_ts`` has no
+    fallback. The flag is never null, so ``status_metrics`` (keep) and
+    ``corrupt_transition_events`` (NOT keep) partition the transitions.
+    """
+    transitions = _status_transition_events(changelog, config)
+    if issues is not None:
+        created = F.broadcast(
+            issues.select(
+                F.col("key").alias("issue_key"),
+                parse_tracker_datetime("createdAt").alias("_created_at"),
+            )
+        )
+        transitions = transitions.join(created, "issue_key", "left")
+    else:
+        transitions = transitions.withColumn(
+            "_created_at", F.lit(None).cast("timestamp")
+        )
+    return (
+        transitions.select(
+            "*",
+            F.coalesce(
+                parse_tracker_datetime("fields[1].`from`"), F.col("_created_at")
+            ).alias("_start_ts"),
+            parse_tracker_datetime("fields[1].`to`").alias("_end_ts"),
+        )
+        .drop("_created_at")
+        .withColumn(
+            "_has_interval",
+            F.col("_start_ts").isNotNull() & F.col("_end_ts").isNotNull(),
+        )
+    )
+
+
 def status_metrics(
     changelog: DataFrame,
     issues: DataFrame | None = None,
@@ -111,35 +152,16 @@ def status_metrics(
     human_readable_duration, busdays_duration,
     human_readable_busdays_duration, last_seen.
     """
-    transitions = _status_transition_events(changelog, config)
-
-    if issues is not None:
-        created = F.broadcast(
-            issues.select(
-                F.col("key").alias("issue_key"),
-                parse_tracker_datetime("createdAt").alias("_created_at"),
-            )
-        )
-        transitions = transitions.join(created, "issue_key", "left")
-    else:
-        transitions = transitions.withColumn(
-            "_created_at", F.lit(None).cast("timestamp")
-        )
-
-    start_raw = F.col("fields")[1]["from"]
-    end_raw = F.col("fields")[1]["to"]
     intervals = (
-        transitions.select(
+        _transition_intervals(changelog, issues, config)
+        # F8: drop corrupt events with no usable interval
+        .where("_has_interval")
+        .select(
             "issue_key",
             to_snake_case(F.lower(F.col("fields")[0]["from"])).alias("status_name"),
-            # initial-status transition: fields[1].from is null → createdAt
-            F.coalesce(parse_tracker_datetime(start_raw), F.col("_created_at")).alias(
-                "start_ts"
-            ),
-            parse_tracker_datetime(end_raw).alias("end_ts"),
+            F.col("_start_ts").alias("start_ts"),
+            F.col("_end_ts").alias("end_ts"),
         )
-        # F8: drop corrupt events with no usable interval
-        .where(F.col("start_ts").isNotNull() & F.col("end_ts").isNotNull())
     )
 
     duration = F.abs(
@@ -191,35 +213,18 @@ def corrupt_transition_events(
     ``status_metrics`` drops — routed to a DataFrame instead of log
     lines so bad data is queryable, not lost (SURVEY F8 mapping).
 
-    Pass the same ``issues`` given to ``status_metrics``: the keep rule
-    is ``coalesce(parse(from), createdAt) IS NOT NULL AND parse(to) IS
-    NOT NULL``, so the quarantine predicate is its exact complement —
-    a null/unparseable ``from`` is only corrupt when no createdAt
-    fallback exists, and an unparseable ``to`` is always corrupt.
-    Metrics + quarantine partition the transition stream: every
-    transition lands in exactly one of the two outputs."""
-    transitions = _status_transition_events(changelog, config)
-    if issues is not None:
-        created = F.broadcast(
-            issues.select(
-                F.col("key").alias("issue_key"),
-                parse_tracker_datetime("createdAt").alias("_created_at"),
-            )
-        )
-        transitions = transitions.join(created, "issue_key", "left")
-    else:
-        transitions = transitions.withColumn(
-            "_created_at", F.lit(None).cast("timestamp")
-        )
-    start_raw = F.col("fields")[1]["from"]
-    end_raw = F.col("fields")[1]["to"]
-    return transitions.where(
-        parse_tracker_datetime(end_raw).isNull()
-        | (
-            parse_tracker_datetime(start_raw).isNull()
-            & F.col("_created_at").isNull()
-        )
-    ).drop("_created_at")
+    Pass the same ``issues`` given to ``status_metrics``: both select
+    on the one keep flag of ``_transition_intervals`` — ``coalesce(
+    parse(from), createdAt) IS NOT NULL AND parse(to) IS NOT NULL`` —
+    this one on its negation. So a null/unparseable ``from`` is only
+    corrupt when no createdAt fallback exists, an unparseable ``to`` is
+    always corrupt, and every transition lands in exactly one of the
+    two outputs."""
+    return (
+        _transition_intervals(changelog, issues, config)
+        .where("NOT _has_interval")
+        .drop("_start_ts", "_end_ts", "_has_interval")
+    )
 
 
 def closed_at_refinement(
@@ -244,7 +249,7 @@ def closed_at_refinement(
         transitions.select(
             "issue_key",
             to_snake_case(F.lower(F.col("fields")[0]["to"])).alias("_to_status"),
-            parse_tracker_datetime(F.col("fields")[1]["to"]).alias("_end_ts"),
+            parse_tracker_datetime("fields[1].`to`").alias("_end_ts"),
         )
         .where(F.col("_to_status").isin(*closed) & F.col("_end_ts").isNotNull())
         .groupBy("issue_key")
