@@ -1,19 +1,19 @@
-"""Signature-kernel equivalence: the Arrow-vectorized MinHash kernel (the
-default, measured ~5-10× cheaper than interpreted HOF folds at sf0.1) must
-be bit-identical to the pure-expression path — both implement
+"""Signature-kernel equivalence: the Arrow-vectorized MinHash kernel
+(measured ~5-10× cheaper than interpreted HOF folds at sf0.1) must be
+bit-identical to the pure-expression reference in
+``tests/dedup_expr_reference.py`` — both implement
 h = fold(codepoints, 0, (h*131 + cp) mod 2^31-1) per shingle position and
 sig_i = min (a_i*h + b_i) mod P. The DuckDB oracle parity test covers
-Arrow-vs-DuckDB; this covers Arrow-vs-JVM-expression so the no-Python
-fallback can't drift.
+Arrow-vs-DuckDB; this covers Arrow-vs-JVM-expression.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.dedup_expr_reference import minhash_signatures_expr
 from yandex_tracker_exporter_spark.operators.dedup import (
     _shingle_hset_kernel,
     minhash_signatures,
-    minhash_signatures_expr,
 )
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -297,7 +297,7 @@ def _eob_scan_bomb(n_scans: int) -> bytes:
     shape the sequential entropy budget cannot see (progressive scans
     are exempt from it, and decode SUCCEEDS, so no quarantine fires).
     ONE builder serves this pin and the junk-probe payload
-    (tools/junk_check.py) — see encode_jpeg_eob_scan_stream."""
+    (tools/make_manifest.py media_wave4) — see encode_jpeg_eob_scan_stream."""
     return mm.encode_jpeg_eob_scan_stream(n_scans)
 
 

@@ -1,4 +1,5 @@
-"""Pins for the round-10 junk-MOVEMENT guards (tools/junk_check.py).
+"""Pins for the round-10 junk-MOVEMENT guards (JUNKCHECK.json, written by
+``tools/make_manifest.py --perturb junk``).
 
 The round-9 junk smoke proved no query CRASHES on junk; the round-10
 movement probe (clean-vs-junk fingerprint + oracle replay on the junk

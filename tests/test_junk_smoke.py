@@ -1,7 +1,8 @@
 """Round-9 operator-surface review, part 5: the junk-corpus smoke
-(tools/junk_smoke.py) industrialized the CRASH half of the latent-input
-probe series — it clones the harness tables with injected junk rows
-(NULL keys/timestamps, NaN doubles, empty + whitespace strings, empty /
+(now ``tools/make_manifest.py --perturb junk``, whose ERROR class is a
+crash) industrialized the CRASH half of the latent-input probe series
+— it clones the harness tables with injected junk rows (NULL
+keys/timestamps, NaN doubles, empty + whitespace strings, empty /
 ragged / non-finite embedding vectors) and runs ALL contract queries
 under driver conditions (bare-session ANSI).
 
@@ -27,7 +28,8 @@ family, two root causes — both fixed:
 
 This test family keeps those five pinned green on a junk corpus and
 asserts the junk clone builder stays usable. The full 151-query sweep
-stays a tool (several minutes), run per-round and recorded in NOTES.
+stays a tool (several minutes) whose verdicts are committed in
+JUNKCHECK.json.
 """
 
 import os
@@ -35,7 +37,7 @@ import shutil
 
 import pytest
 
-from tools.junk_smoke import TABLES, build_junk_corpus
+from tools.make_manifest import TABLES, build_junk_corpus
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 JUNK_DIR = "/tmp/junk_smoke_pytest"

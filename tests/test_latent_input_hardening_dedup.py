@@ -168,9 +168,9 @@ def test_minhash_expr_kernel_null_and_short_text_parity(spark):
     text (NULL signature — the expr path used to return the INIT
     sentinel, making null docs perfect duplicates of each other),
     empty text, and sub-shingle text (single truncated shingle)."""
+    from tests.dedup_expr_reference import minhash_signatures_expr
     from yandex_tracker_exporter_spark.operators.dedup import (
         minhash_signatures,
-        minhash_signatures_expr,
     )
 
     df = spark.createDataFrame(

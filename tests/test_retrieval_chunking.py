@@ -88,10 +88,10 @@ def _cdc_chunks_column_path(df, content_col="text", id_col="doc_id",
     """Verbatim pre-r12-batch-6 Column-builder implementation of
     cdc_chunks — the expression reference the Arrow kernel must equal
     (the test_window_funnel_sql_fold_matches_column_fold pattern)."""
+    from tests.dedup_expr_reference import _codepoints
     from yandex_tracker_exporter_spark.operators.dedup import (
         MINHASH_PRIME,
         POLY_BASE,
-        _codepoints,
     )
 
     df = df.where(F.col(content_col).isNotNull())

@@ -4,10 +4,10 @@ equality, the shared-substring guarantee, and the stop-fingerprint cap."""
 import pytest
 from pyspark.sql import functions as F
 
+from tests.dedup_expr_reference import winnow_fingerprints_expr
 from yandex_tracker_exporter_spark.operators.dedup import (
     winnow_duplicate_pairs,
     winnow_fingerprints,
-    winnow_fingerprints_expr,
 )
 
 

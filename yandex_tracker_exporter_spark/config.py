@@ -62,9 +62,6 @@ class EngineConfig:
     #: Changelog event types kept by the metric pipeline (``base.py:23-25``).
     workflow_event_type: str = "IssueWorkflow"
     moved_event_type: str = "IssueMoved"
-    #: Max changed-value length before truncation sentinel (``helpers.py:270-273``).
-    changelog_value_max_len: int = 100
-    changelog_value_sentinel: str = "text too long, see history in UI"
 
     @classmethod
     def from_env(

@@ -28,6 +28,8 @@ from yandex_tracker_exporter_spark.functions.datetimes import (
     sql_string,
 )
 
+#: Max changed-value length before the truncation sentinel
+#: (reference ``helpers.py:270-273``).
 TEXT_TOO_LONG_SENTINEL = "text too long, see history in UI"
 MAX_TEXT_LEN = 100
 #: Rendering of a changelog value that parses as a datetime.

@@ -2120,7 +2120,7 @@ def encode_jpeg_eob_scan_stream(
     cap it decodes to the level-shift constant (all coefficients
     zero). The SINGLE builder behind both the pytest pin
     (tests/test_jpeg_progressive.py) and the junk-probe payload
-    (tools/junk_check.py) — two hand-rolled copies would drift
+    (tools/make_manifest.py media_wave4) — two hand-rolled copies would drift
     silently (r12 review)."""
 
     def seg(marker: int, body: bytes) -> bytes:
