@@ -3,16 +3,22 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.etl import (
+    EtlResult,
     run_etl,
     transform_changelog,
     transform_issues,
 )
 from yandex_tracker_exporter_spark.operators.dedup import latest_version_dedup
-from yandex_tracker_exporter_spark.plans.search_spec import SearchSpec
-from yandex_tracker_exporter_spark.schemas import DEDUP_KEYS
+from yandex_tracker_exporter_spark.plans.search_spec import SearchSpec, apply_search
+from yandex_tracker_exporter_spark.schemas import (
+    DEDUP_KEYS,
+    RAW_CHANGELOG_SCHEMA,
+    RAW_ISSUE_SCHEMA,
+)
 from yandex_tracker_exporter_spark.sources.sinks import read_latest
 from yandex_tracker_exporter_spark.sources.state import FileStateStore
 
@@ -178,6 +184,215 @@ def test_run_etl_incremental_upsert(spark, raw_issues, raw_changelog, tmp_path):
     # state survives a new store instance (the JSON contract, S8)
     fresh = FileStateStore(str(tmp_path / "state.json"))
     assert fresh.get("issues") == result.watermark
+
+
+BACKFILL = SearchSpec(watermark=dt.datetime(2023, 1, 1))  # before every fixture
+TABLES = ("issues", "issues_changelog", "issue_metrics")
+
+
+def _final_views(spark, out):
+    """Each table's FINAL view minus ``version`` as sorted rows of
+    strings (Python datetimes cannot hold year 0)."""
+    views = {}
+    for table in TABLES:
+        view = read_latest(spark, f"{out}/{table}", DEDUP_KEYS[table]).drop("version")
+        rows = view.select([F.col(c).cast("string") for c in view.columns]).collect()
+        views[table] = sorted(repr(tuple(r)) for r in rows)
+    return views
+
+
+def test_run_etl_failed_write_waits_for_the_others_and_keeps_watermark(
+    spark, raw_issues, raw_changelog, tmp_path
+):
+    """ST7 with the three writes running at the same time: when one
+    fails, run_etl raises its error only after the other two finished,
+    and the stored watermark does not move. With the blocker gone, a
+    rerun gives the same FINAL views as a clean run."""
+    out = tmp_path / "wh"
+    out.mkdir()
+    blocker = out / "issue_metrics"
+    blocker.write_text("a regular file where the table directory goes")
+    state_path = str(tmp_path / "state.json")
+    stored = dt.datetime(2023, 1, 1)
+    state = FileStateStore(state_path)
+    state.set("issues", stored)
+    state.flush()
+
+    with pytest.raises(Exception, match="issue_metrics"):
+        run_etl(raw_issues, raw_changelog, str(out), state=state)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    for table in ("issues", "issues_changelog"):
+        assert (out / table / "_SUCCESS").exists(), table
+    assert FileStateStore(state_path).get("issues") == stored
+
+    blocker.unlink()
+    rerun = run_etl(raw_issues, raw_changelog, str(out), state=FileStateStore(state_path))
+    clean = run_etl(raw_issues, raw_changelog, str(tmp_path / "clean"), search=BACKFILL)
+    assert rerun == clean
+    assert FileStateStore(state_path).get("issues") == clean.watermark
+    assert _final_views(spark, out) == _final_views(spark, tmp_path / "clean")
+
+
+def test_run_etl_skips_empty_up_to_date_and_unparseable_batches(
+    spark, raw_issues, raw_changelog, tmp_path
+):
+    """F4 and F5 from the one check job. An empty filtered batch skips
+    with watermark None; an up-to-date batch returns the stored
+    watermark; a non-empty batch whose updatedAt never parses has no
+    candidate watermark, so it takes the F5 path. None writes a table."""
+    out = tmp_path / "wh"
+    future = SearchSpec(watermark=dt.datetime(2030, 1, 1))
+    assert run_etl(raw_issues, raw_changelog, str(out), search=future) == EtlResult(
+        0, 0, 0, None, skipped=True
+    )
+
+    state = FileStateStore(str(tmp_path / "state.json"))
+    stored = dt.datetime(2023, 5, 12, 9, 0)  # the latest fixture updatedAt
+    state.set("issues", stored)
+    got = run_etl(raw_issues, raw_changelog, str(out), state=state, search=BACKFILL)
+    assert got == EtlResult(0, 0, 0, stored, skipped=True)
+
+    # a raw predicate replaces the updatedAt filter, so the rows survive it
+    garbled = raw_issues.withColumn("updatedAt", F.lit("not a date"))
+    every = SearchSpec(raw_predicate=F.lit(True))
+    assert run_etl(garbled, raw_changelog, str(out)) == EtlResult(0, 0, 0, None, skipped=True)
+    got = run_etl(garbled, raw_changelog, str(out), state=state, search=every)
+    assert got == EtlResult(0, 0, 0, stored, skipped=True)
+    assert not out.exists()
+
+
+#: jobs one run_etl over the fixtures launched before the empty and
+#: up-to-date checks became one aggregate
+PARENT_RUN_JOBS = 19
+
+
+def test_run_etl_jobs_carry_the_callers_job_group(spark, raw_issues, raw_changelog, tmp_path):
+    """The write threads inherit the caller's job group: every job the
+    run launches is in it, and the run needs fewer jobs than before."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def fence(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return tracker.getJobIdsForGroup(group)
+
+    first = max(fence("etl-fence-before"))
+    sc.setJobGroup("etl-run", "run_etl under a caller's job group")
+    try:
+        run_etl(raw_issues, raw_changelog, str(tmp_path / "wh"), search=BACKFILL)
+        last = min(fence("etl-fence-after"))
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sorted(tracker.getJobIdsForGroup("etl-run"))
+    assert jobs == list(range(first + 1, last))
+    assert len(jobs) <= PARENT_RUN_JOBS - 1, len(jobs)
+
+
+ANSI = "spark.sql.ansi.enabled"
+#: Raw values that parse in neither mode or sit at the edges of the
+#: calendar, for the ANSI-identity run.
+EDGE_ISSUES = [
+    {
+        "key": "EDGE-1",
+        "queue": {"key": "EDGE"},
+        "status": {"name": "Closed"},
+        "createdAt": "garbage",
+        "updatedAt": "not a date",
+        "resolvedAt": "2023-99-99T00:00:00.000000+0000",
+        "start": "2023-05-01T10:00:00.000+0000",
+        "storyPoints": float("nan"),
+    },
+    {
+        "key": "EDGE-2",
+        "queue": {"key": "EDGE"},
+        "status": {"name": "Open"},
+        "createdAt": "0000-01-01T00:00:00.000000+0000",
+        "updatedAt": "9999-12-31T23:59:59.999999+0000",
+        "storyPoints": float("inf"),
+    },
+]
+
+
+def _edge_event(updated_at, start, end, value="Open"):
+    return {
+        "issue_key": "EDGE-2",
+        "queue": "EDGE",
+        "updatedAt": updated_at,
+        "type": "IssueWorkflow",
+        "transport": "api",
+        "updatedBy": {"email": "Edge@Example.com", "name": "Edge"},
+        "fields": [
+            {"field": {"id": "status", "name": "Status"}, "from": value, "to": "In progress"},
+            {"field": {"id": "statusStartTime", "name": "Status start"}, "from": start, "to": end},
+        ],
+    }
+
+
+EDGE_EVENTS = [
+    _edge_event("garbage", None, "garbage"),
+    _edge_event("2023-05-02T10:00:00.000000+0000", "2023-99-99T00:00:00.000+0000", "garbage"),
+    _edge_event(
+        "2023-05-03T10:00:00.000000+0000",
+        "0001-01-01T00:00:00.000000+0000",
+        "9999-12-31T23:59:59.000000+0000",
+        value="12345678901234567890123",
+    ),
+]
+
+
+def test_run_etl_final_views_do_not_depend_on_ansi_mode(
+    spark, raw_issues, raw_changelog, tmp_path
+):
+    """ROADMAP 5(b): run_etl end to end with ANSI off and on gives the
+    same counts, watermark and FINAL views on the fixture corpus plus
+    rows with unparseable, far-past and far-future datetimes, NaN and
+    infinite story points and a 23-digit changelog value. No search
+    spec, so no updatedAt filter runs (its difference is pinned below)."""
+    before = spark.conf.get(ANSI)
+    results, views = {}, {}
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(ANSI, mode)
+            issues = raw_issues.unionByName(spark.createDataFrame(EDGE_ISSUES, RAW_ISSUE_SCHEMA))
+            changelog = raw_changelog.unionByName(
+                spark.createDataFrame(EDGE_EVENTS, RAW_CHANGELOG_SCHEMA)
+            )
+            out = tmp_path / f"ansi_{mode}"
+            results[mode] = run_etl(issues, changelog, str(out))
+            views[mode] = _final_views(spark, out)
+    finally:
+        spark.conf.set(ANSI, before)
+    assert results["false"] == results["true"]
+    assert results["true"].issues == 5
+    assert views["false"] == views["true"]
+
+
+def test_ansi_mode_changes_malformed_dates_and_the_updated_filter(spark, raw_issues):
+    """The two places where ANSI mode changes what run_etl does with a
+    malformed raw value (recorded under ROADMAP 5(b)). ANSI off, the
+    mode ``get_spark`` sets: a malformed ``start``/``end``/``deadline``
+    becomes NULL, and an unparseable ``updatedAt`` fails the search
+    filter's comparison, so the issue is dropped. ANSI on: both casts
+    raise CAST_INVALID_INPUT, so the whole run fails."""
+    bad = (
+        raw_issues.where(F.col("key") == "TEST-1")
+        .withColumn("deadline", F.lit("soon"))
+        .withColumn("updatedAt", F.lit("garbage"))
+    )
+    before = spark.conf.get(ANSI)
+    try:
+        spark.conf.set(ANSI, "false")
+        assert [r["deadline"] for r in transform_issues(bad).collect()] == [None]
+        assert apply_search(bad, BACKFILL, queue_col="queue.key", updated_col="updatedAt").count() == 0
+
+        spark.conf.set(ANSI, "true")
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT.*'soon'"):
+            transform_issues(bad).collect()
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT.*'garbage'"):
+            apply_search(bad, BACKFILL, queue_col="queue.key", updated_col="updatedAt").count()
+    finally:
+        spark.conf.set(ANSI, before)
 
 
 def test_latest_version_dedup(spark):

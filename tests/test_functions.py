@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from tests.business_reference import business_seconds_pandas_udf
 from yandex_tracker_exporter_spark.functions import (
     business_seconds,
-    business_seconds_pandas_udf,
     from_human_time,
     parse_tracker_datetime,
     string_normalize,

@@ -9,10 +9,8 @@ import datetime as dt
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from yandex_tracker_exporter_spark.functions.business import (
-    business_seconds,
-    business_seconds_pandas_udf,
-)
+from tests.business_reference import business_seconds_pandas_udf
+from yandex_tracker_exporter_spark.functions.business import business_seconds
 from yandex_tracker_exporter_spark.functions.datetimes import (
     from_human_time,
     to_human_time,

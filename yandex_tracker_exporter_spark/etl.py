@@ -18,7 +18,10 @@ changelog, schemas in ``schemas.py``):
 
 ``run_etl`` wires them with the incremental search spec (F1), watermark
 state (S8/ST2/ST7) and versioned sinks (O1/O2) — the full reference
-lifecycle (``etl.py:203-264``) as one idempotent batch.
+lifecycle (``etl.py:203-264``) as one idempotent batch. One aggregate
+job over the filtered raw issues decides both short-circuits (F4 empty,
+F5 up to date); the three table writes are independent, so they run at
+the same time, one driver thread each.
 
 Extension surface (U1, ``examples/extended_model/main.py:8-31``): pass
 ``extra_columns={name: Column}`` — appended to the projection exactly
@@ -30,7 +33,8 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark import InheritableThread
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -45,7 +49,7 @@ from yandex_tracker_exporter_spark.operators.sessionize import (
     status_metrics,
 )
 from yandex_tracker_exporter_spark.operators.watermark import (
-    compute_watermark,
+    compute_watermark,  # noqa: F401 — perfbench's traced run wraps etl.compute_watermark
     is_up_to_date,
 )
 from yandex_tracker_exporter_spark.plans.search_spec import SearchSpec, apply_search
@@ -217,6 +221,29 @@ def transform_changelog(
     )
 
 
+def _write_concurrently(spark: SparkSession, writes: list[tuple]) -> None:
+    """``write_versioned(*args)`` for each entry, each from its own
+    driver thread so Spark schedules the jobs at the same time. The
+    threads inherit the caller's job group, description and pool. Waits
+    for every write, then raises the first failure in list order."""
+    errors: list[BaseException | None] = [None] * len(writes)
+
+    def write(i: int) -> None:
+        try:
+            write_versioned(*writes[i])
+        except BaseException as exc:  # re-raised on the caller's thread
+            errors[i] = exc
+
+    threads = [InheritableThread(write, args=(i,), session=spark) for i in range(len(writes))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+
+
 @dataclass
 class EtlResult:
     issues: int
@@ -239,8 +266,11 @@ def run_etl(
     """One full incremental run (reference ``YandexTrackerETL.run``).
 
     Order of operations preserves the reference's exactly-once-ish
-    contract (ST7): filter → transform → write all three tables → only
-    then commit the watermark.
+    contract (ST7): filter → one check job (row count and candidate
+    watermark; F4/F5) → transform → write all three tables at the same
+    time → only then commit the watermark. If a write fails, the error
+    is raised after the other writes finish and the watermark is left
+    as it was.
     """
     if search is None and state is not None:
         search = SearchSpec(watermark=state.get(state_key))
@@ -252,49 +282,41 @@ def run_etl(
         keys = raw_issues.select(F.col("key").alias("issue_key")).distinct()
         raw_changelog = raw_changelog.join(F.broadcast(keys), "issue_key", "left_semi")
 
-    if raw_issues.isEmpty():  # F4 short-circuit
+    # F4 and F5 from one aggregate over the filtered raw issues, with the
+    # ``updated_at`` expression ``transform_issues`` projects: the same
+    # max as over the joined frame, which would cost extra jobs
+    n, candidate = raw_issues.agg(
+        F.count(F.lit(1)), F.max(parse_tracker_datetime("updatedAt"))
+    ).first()
+    if n == 0:  # F4 short-circuit
         return EtlResult(0, 0, 0, None, skipped=True)
-
-    version = F.current_timestamp()
-    issues = transform_issues(raw_issues, raw_changelog, config, extra_columns)
-    changelog = transform_changelog(raw_changelog, config)
-    metrics = status_metrics(raw_changelog, raw_issues, config)
-
-    candidate = compute_watermark(issues, "updated_at")
     stored = state.get(state_key) if state is not None else None
     if is_up_to_date(candidate, stored):  # F5 short-circuit
         return EtlResult(0, 0, 0, stored, skipped=True)
 
+    tables = (
+        ("issues", "issues", "updated_at",
+         transform_issues(raw_issues, raw_changelog, config, extra_columns)),
+        ("changelog", "issues_changelog", "event_time", transform_changelog(raw_changelog, config)),
+        ("metrics", "issue_metrics", "last_seen", status_metrics(raw_changelog, raw_issues, config)),
+    )
     # A3 run counters ride the write jobs as observed metrics — no extra
     # counting actions (the reference pays a python statement per row).
-    from pyspark.sql import Observation
-
-    obs = {name: Observation(f"etl_{name}") for name in ("issues", "changelog", "metrics")}
-    write_versioned(
-        issues.observe(obs["issues"], F.count(F.lit(1)).alias("n")).withColumn(
-            "version", version
-        ),
-        f"{output_dir}/issues",
-        DEDUP_KEYS["issues"],
-        partition_ts_col="updated_at",
+    obs = {name: Observation(f"etl_{name}") for name, *_ in tables}
+    version = F.current_timestamp()
+    _write_concurrently(
+        raw_issues.sparkSession,
+        [
+            (
+                df.observe(obs[name], F.count(F.lit(1)).alias("n")).withColumn("version", version),
+                f"{output_dir}/{table}",
+                DEDUP_KEYS[table],
+                ts_col,
+            )
+            for name, table, ts_col, df in tables
+        ],
     )
-    write_versioned(
-        changelog.observe(obs["changelog"], F.count(F.lit(1)).alias("n")).withColumn(
-            "version", version
-        ),
-        f"{output_dir}/issues_changelog",
-        DEDUP_KEYS["issues_changelog"],
-        partition_ts_col="event_time",
-    )
-    write_versioned(
-        metrics.observe(obs["metrics"], F.count(F.lit(1)).alias("n")).withColumn(
-            "version", version
-        ),
-        f"{output_dir}/issue_metrics",
-        DEDUP_KEYS["issue_metrics"],
-        partition_ts_col="last_seen",
-    )
-    if state is not None and candidate is not None:  # ST7 commit-after-write
+    if state is not None:  # ST7 commit-after-write; a None candidate took F5
         state.set(state_key, candidate)
         state.flush()
     return EtlResult(

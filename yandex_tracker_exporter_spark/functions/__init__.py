@@ -2,9 +2,7 @@
 
 Every function here returns a Spark ``Column`` built from built-in
 expressions — JVM-side, whole-stage-codegen-friendly, no Python in the
-hot path. The one calendar-heavy function (business-hours duration) has
-both a pure-Spark expression (default, scales) and a pandas-UDF variant
-(parity/reference implementation).
+hot path, including the calendar-heavy business-hours duration.
 """
 
 from yandex_tracker_exporter_spark.functions.text import (
@@ -18,10 +16,7 @@ from yandex_tracker_exporter_spark.functions.datetimes import (
     from_human_time,
     bytes_to_human,
 )
-from yandex_tracker_exporter_spark.functions.business import (
-    business_seconds,
-    business_seconds_pandas_udf,
-)
+from yandex_tracker_exporter_spark.functions.business import business_seconds
 from yandex_tracker_exporter_spark.functions.changelog import (
     extract_changelog_value,
 )
@@ -35,6 +30,5 @@ __all__ = [
     "from_human_time",
     "bytes_to_human",
     "business_seconds",
-    "business_seconds_pandas_udf",
     "extract_changelog_value",
 ]

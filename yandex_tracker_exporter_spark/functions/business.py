@@ -1,25 +1,19 @@
 """Business-hours interval duration (reference P6 — the hardest scalar).
 
 The reference computes it per-row in Python with ``businesstimedelta`` +
-``holidays.RU()`` (``helpers.py:40-73``). Two implementations here:
-
-1. ``business_seconds`` — **pure Spark expression** (the default and the
-   100 TB path): closed-form. Only the two boundary days need clipping
-   against the business window; every interior day contributes the full
-   window length iff its weekday is a workday and it is not a holiday,
-   so interior days are COUNTED (one O(1) weekday-count term per
-   configured workday, one containment term per configured holiday)
-   rather than expanded. Entirely JVM-side, whole-stage codegen, no
-   arrays, no shuffle, no Python — and constant cost for any span
-   (the round-2 ``sequence()`` expansion nulled out past ~3 years).
-   It is rendered as SQL text and parsed by one ``F.expr``; the
-   Column-API form of the same closed form is the test-side
-   reference in ``tests/test_functions.py``.
-
-2. ``business_seconds_pandas_udf`` — Arrow-vectorized pandas UDF with
-   the same day-clipping arithmetic in numpy, kept as a reference
-   implementation / escape hatch for calendar rules the expression form
-   cannot express.
+``holidays.RU()`` (``helpers.py:40-73``). Here ``business_seconds`` is a
+**pure Spark expression**, closed-form. Only the two boundary days need
+clipping against the business window; every interior day contributes
+the full window length iff its weekday is a workday and it is not a
+holiday, so interior days are COUNTED (one O(1) weekday-count term per
+configured workday, one containment term per configured holiday) rather
+than expanded. Entirely JVM-side, whole-stage codegen, no arrays, no
+shuffle, no Python — and constant cost for any span (the round-2
+``sequence()`` expansion nulled out past ~3 years). It is rendered as
+SQL text and parsed by one ``F.expr``. Two test-side references check
+it: the Column-API form of the same closed form
+(``tests/test_functions.py``) and an independent day-walking pandas UDF
+(``tests/business_reference.py``).
 
 Holidays are **data** (a broadcast-able literal array / dimension), not a
 hardcoded country module — the reference's ``holidays.RU()`` is a config
@@ -32,12 +26,9 @@ interval is 0; a 10:00→23:00 workday with 09-22 hours clips to 12h.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
 
 def _qident(name: str) -> str:
     """Backtick-quote a column name for the SQL fast path."""
@@ -158,44 +149,3 @@ def business_seconds(
         _business_seconds_sql(start, end, workdays, hour_start, hour_end, holiday_dates)
     )
 
-
-def business_seconds_pandas_udf(
-    workdays: tuple[int, ...] = (0, 1, 2, 3, 4),
-    hour_start: int = 9,
-    hour_end: int = 22,
-    holiday_dates: tuple[str, ...] = (),
-):
-    """Arrow-vectorized pandas UDF with identical semantics.
-
-    Returned as a udf object: ``udf = business_seconds_pandas_udf();
-    df.select(udf("start", "end"))``. Kept for calendar rules beyond the
-    expression form (e.g. per-queue calendars); ~numpy-vectorized per
-    batch, no per-row Python.
-    """
-    holiday_set = frozenset(pd.Timestamp(d).date() for d in holiday_dates)
-    workday_set = frozenset(workdays)
-
-    @pandas_udf("long")
-    def _business_seconds(start: pd.Series, end: pd.Series) -> pd.Series:
-        lo = np.minimum(start.values, end.values)
-        hi = np.maximum(start.values, end.values)
-        out = np.zeros(len(start), dtype="float64")
-        lo_days = pd.Series(lo).dt.normalize()
-        hi_days = pd.Series(hi).dt.normalize()
-        for i in range(len(start)):
-            if pd.isna(lo[i]) or pd.isna(hi[i]):
-                out[i] = np.nan
-                continue
-            days = pd.date_range(lo_days.iloc[i], hi_days.iloc[i], freq="D")
-            mask = np.array(
-                [d.weekday() in workday_set and d.date() not in holiday_set for d in days]
-            )
-            win_lo = np.maximum(
-                (days + pd.Timedelta(hours=hour_start)).values, lo[i]
-            )
-            win_hi = np.minimum((days + pd.Timedelta(hours=hour_end)).values, hi[i])
-            secs = (win_hi - win_lo) / np.timedelta64(1, "s")
-            out[i] = np.where(mask, np.maximum(secs, 0), 0).sum()
-        return pd.Series(out).astype("Int64")
-
-    return _business_seconds
