@@ -369,26 +369,32 @@ def test_run_etl_final_views_do_not_depend_on_ansi_mode(
 
 
 def test_ansi_mode_changes_malformed_dates_and_the_updated_filter(spark, raw_issues):
-    """The two places where ANSI mode changes what run_etl does with a
-    malformed raw value (recorded under ROADMAP 5(b)). ANSI off, the
-    mode ``get_spark`` sets: a malformed ``start``/``end``/``deadline``
-    becomes NULL, and an unparseable ``updatedAt`` fails the search
-    filter's comparison, so the issue is dropped. ANSI on: both casts
-    raise CAST_INVALID_INPUT, so the whole run fails."""
+    """How ANSI mode treats a malformed raw value in run_etl (recorded
+    under ROADMAP 7(b)). A malformed ``start``/``end``/``deadline``
+    becomes NULL under both modes (``try_cast``). An unparseable
+    ``updatedAt`` still depends on the mode: ANSI off, the mode
+    ``get_spark`` sets, it fails the search filter's comparison, so the
+    issue is dropped; ANSI on, the comparison's cast raises
+    CAST_INVALID_INPUT, so the whole run fails."""
     bad = (
         raw_issues.where(F.col("key") == "TEST-1")
+        .withColumn("start", F.lit("2024-13-45"))
+        .withColumn("end", F.lit("later"))
         .withColumn("deadline", F.lit("soon"))
         .withColumn("updatedAt", F.lit("garbage"))
     )
+    dates = ("start_date", "end_date", "deadline")
     before = spark.conf.get(ANSI)
     try:
+        for mode in ("false", "true"):
+            spark.conf.set(ANSI, mode)
+            got = [tuple(r[c] for c in dates) for r in transform_issues(bad).collect()]
+            assert got == [(None, None, None)], mode
+
         spark.conf.set(ANSI, "false")
-        assert [r["deadline"] for r in transform_issues(bad).collect()] == [None]
         assert apply_search(bad, BACKFILL, queue_col="queue.key", updated_col="updatedAt").count() == 0
 
         spark.conf.set(ANSI, "true")
-        with pytest.raises(Exception, match="CAST_INVALID_INPUT.*'soon'"):
-            transform_issues(bad).collect()
         with pytest.raises(Exception, match="CAST_INVALID_INPUT.*'garbage'"):
             apply_search(bad, BACKFILL, queue_col="queue.key", updated_col="updatedAt").count()
     finally:

@@ -395,6 +395,73 @@ def test_wav_parser_rejects_truncated_and_size_lying_chunks():
     assert mm._decode_payload_verbose(bytes(lie))[1] == "malformed"
 
 
+def test_bench_session_size_from_env_and_machine():
+    """Sessions are sized from the machine: cores from $SPARK_GRAFT_CPUS,
+    else the CPUs this process may run on; the driver heap is half of
+    physical RAM and never exceeds it."""
+    import bench
+
+    gib = 2**30
+    assert bench.session_size({"SPARK_GRAFT_CPUS": "6"}, 4, 15 * gib) == (6, "7680m")
+    assert bench.session_size({}, 4, 15 * gib) == (4, "7680m")
+    assert bench.session_size({"SPARK_GRAFT_CPUS": ""}, 3, 2 * gib) == (3, "1024m")
+    cpus, heap = bench.session_size({})
+    assert cpus == len(os.sched_getaffinity(0))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    assert 0 < int(heap.rstrip("m")) <= ram_mb
+
+
+def test_bench_only_and_plans_arguments():
+    """``--only`` takes make_manifest's comma syntax and keeps contract
+    order; an unknown or empty selection exits; ``--plans`` names a
+    directory."""
+    import pytest
+
+    import bench
+
+    order = list(entry_mod.queries())
+    a = bench._parse_args(["--only", "exact_dedup,point_lookup"])
+    assert a.names == [n for n in order if n in {"exact_dedup", "point_lookup"}]
+    assert a.plans is None
+    assert bench._parse_args(["--only=point_lookup,"]).names == ["point_lookup"]
+    full = bench._parse_args([])
+    assert full.only is None and full.names == order
+    assert bench._parse_args(["--plans", "/tmp/p"]).plans == "/tmp/p"
+    for bad in (["--only", "point_lookup,no_such_query"], ["--only", ","], ["--bogus"]):
+        with pytest.raises(SystemExit):
+            bench._parse_args(bad)
+
+
+def test_bench_measures_layers_and_writes_plans_in_process(spark, tmp_path):
+    """The harness on two queries at sf0.01 in the suite's session (so
+    ``main`` and its leftover-JVM kill are never reached): every sample
+    is build + execute, each query's layers come from its own timed job
+    group, and ``--plans`` writes one non-empty file per query."""
+    import bench
+
+    sf = _load("make_manifest").DEFAULT_SF  # sf0.01
+    names = ["point_lookup", "exact_dedup"]
+    samples, rows = bench.time_query(
+        spark, entry_mod.queries()["point_lookup"], sf, 2, "test:bench", None
+    )
+    assert rows > 0 and len(samples) == 2
+    assert all(b > 0 and e > 0 and layer is None for b, e, layer in samples)
+
+    out = bench.measure(spark, sf, names, runs=2, passes=2, max_extra=0)
+    assert out["n_queries"] == 2 and out["samples_per_query"] == 2
+    assert set(out["layers"]) == set(names)
+    for name, layer in out["layers"].items():
+        assert abs(layer["build_s"] + layer["exec_s"] - out["queries"][name]) <= 0.002
+        assert layer["jobs"] >= 1 and layer["stages"] >= 1 and layer["tasks"] >= 1
+        assert layer["executor_run_s"] >= 0 and "python_s" in layer
+
+    bench.write_plans(spark, sf, names, str(tmp_path))
+    assert sorted(os.listdir(tmp_path)) == sorted(f"{n}.txt" for n in names)
+    for name in names:
+        text = (tmp_path / f"{name}.txt").read_text()
+        assert text.startswith("== Physical Plan ==")
+
+
 def test_bench_diff_classifies_deltas_by_spread():
     """bench_diff buckets per-query deltas against each run's OWN
     best-vs-second-best spread (falling back to the 0.05 s jitter

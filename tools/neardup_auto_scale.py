@@ -24,6 +24,9 @@ Usage::
 
     python tools/neardup_auto_scale.py [factor] [runs]
 
+Runs in bench.py's session (local[$SPARK_GRAFT_CPUS], default: the CPUs
+this process may run on).
+
 Requires the scale_check blow-up for ``factor`` to exist (run
 ``python tools/scale_check.py <factor> <runs> exact_dedup`` first if
 not). Prints one JSON line with times, resolved plane counts, recalls,
@@ -36,11 +39,11 @@ import json
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402  (the shared session and timing loop)
 from tools.scale_check import BIG, SF_SMALL, WORK  # noqa: E402
 
 NEARDUP_ID_OFFSET = 100_000_000  # > any blown-up vec_id
@@ -89,13 +92,10 @@ def measure(spark, sf_dir: str, runs: int) -> dict:
             corpus, threshold=0.9, num_planes="auto", n_vectors=n
         )
 
-    run().count()  # warm codegen + Arrow workers
-    best = None
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        n_pairs = run().count()
-        el = time.perf_counter() - t0
-        best = el if best is None or el < best else best
+    samples, n_pairs = bench.time_query(
+        spark, lambda *_: run(), sf_dir, runs, "neardup"
+    )
+    best = min(b + e for b, e, _ in samples)
     # recall vs planted ground truth: every (v, v+OFFSET) pair
     pairs = run().where(
         F.col("b_id") - F.col("a_id") == NEARDUP_ID_OFFSET
@@ -128,19 +128,7 @@ def main() -> None:
         )
         sys.exit(2)
 
-    from yandex_tracker_exporter_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="yte-neardup-auto-scale",
-        master="local[32]",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "24g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark, _ = bench.start_session("yte-neardup-auto-scale")
 
     small = measure(spark, SF_SMALL, runs)
     print(f"small: {small}", flush=True)

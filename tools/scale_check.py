@@ -34,9 +34,10 @@ Blow-up construction (deterministic, join-consistent):
   preserving, and rotated vectors decorrelate, so the planted-pair
   density per vector stays what sf0.1 has.
 
-Usage: python tools/scale_check.py [factor] [runs]
-Writes /tmp/yte_scale_check/result_c{cpus}.json (cpus = SPARK_GRAFT_CPUS,
-default 32) and prints a markdown table.
+Usage: python tools/scale_check.py [factor] [runs] [query ...]
+Runs in bench.py's session (local[$SPARK_GRAFT_CPUS], default: the CPUs
+this process may run on). Writes /tmp/yte_scale_check/result_c{cpus}.json
+and prints a markdown table.
 """
 
 from __future__ import annotations
@@ -45,10 +46,11 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+import bench  # noqa: E402  (the shared session and timing loop)
 
 SF_SMALL = "/root/testdata/sf0.1"
 WORK = "/tmp/yte_scale_check"
@@ -154,17 +156,12 @@ def build_big(spark, factor: int) -> None:
 def time_queries(
     spark, qs, sf_dir: str, runs: int, subset: list[str] | None = None
 ) -> dict[str, float]:
+    """Best-of-``runs`` seconds per query, through bench.py's timing loop
+    (one un-timed warm run first)."""
     out: dict[str, float] = {}
     for name in subset or QUERY_SUBSET:
-        fn = qs[name]
-        fn(spark, sf_dir).count()  # warm codegen / checkpoint caches
-        best = None
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            el = time.perf_counter() - t0
-            best = el if best is None or el < best else best
-        out[name] = round(best, 3)
+        samples, _ = bench.time_query(spark, qs[name], sf_dir, runs, f"scale:{name}")
+        out[name] = round(min(b + e for b, e, _ in samples), 3)
         print(f"  {sf_dir.rsplit('/', 1)[-1]} {name}: {out[name]}s", flush=True)
         spark.catalog.clearCache()
         spark._jvm.System.gc()
@@ -178,23 +175,9 @@ def main() -> None:
     # after a fix shouldn't cost the full 20-query double sweep)
     subset = sys.argv[3:] or None
 
-    from yandex_tracker_exporter_spark.session import get_spark
-
-    # r13 (VERDICT r12 #5): core count honors $SPARK_GRAFT_CPUS so the
-    # same blow-up can measure the 8-vs-32-core scaling ratio at the
-    # big SF (the driver's own scaling protocol, applied here).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name="yte-scale-check",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "24g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # the session helper honours $SPARK_GRAFT_CPUS, so the same blow-up
+    # measures a core-count scaling ratio at the big SF
+    spark, cpus = bench.start_session("yte-scale-check")
     import __spark_entry__ as m
 
     # Reuse an existing blow-up of the SAME factor (a factor-30 build

@@ -72,7 +72,9 @@ def transform_issues(
     """RAW_ISSUE_SCHEMA → ISSUES_SCHEMA wide projection (minus version).
 
     Every per-row Python getattr walk in the reference becomes a struct
-    field access; missing structs yield null automatically (P1).
+    field access; missing structs yield null automatically (P1). A
+    malformed ``start``/``end``/``deadline`` becomes NULL under either
+    ANSI mode (``try_cast``).
     """
     resolution = to_snake_case(_low(F.col("resolution.name")))
     status = to_snake_case(_low(F.col("status.name")))
@@ -101,9 +103,9 @@ def transform_issues(
         parse_tracker_datetime("updatedAt").alias("updated_at"),
         resolved_at.alias("resolved_at"),
         F.when(is_resolved, resolved_at).alias("closed_at"),
-        F.col("start").cast("date").alias("start_date"),
-        F.col("end").cast("date").alias("end_date"),
-        F.col("deadline").cast("date").alias("deadline"),
+        F.col("start").try_cast("date").alias("start_date"),
+        F.col("end").try_cast("date").alias("end_date"),
+        F.col("deadline").try_cast("date").alias("deadline"),
         F.coalesce(F.col("storyPoints"), F.lit(0.0)).cast("float").alias("story_points"),
         F.col("parent.key").alias("parent_issue_key"),
         F.col("epic.key").alias("epic_issue_key"),
