@@ -239,8 +239,8 @@ def q_snake_case(spark, sf_dir):
         _t(spark, sf_dir, "part")
         .select(
             F.col("p_partkey").cast("long"),
-            to_snake_case(F.col("p_type")).alias("p_type_snake"),
-            to_snake_case(F.col("p_brand")).alias("p_brand_snake"),
+            to_snake_case("p_type").alias("p_type_snake"),
+            to_snake_case("p_brand").alias("p_brand_snake"),
         )
     )
 

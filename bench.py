@@ -237,6 +237,21 @@ def _failed_tasks_for_group(sc, group: str) -> int:
     return n
 
 
+def _wait_for_tasks(sc, timeout_s: float = 60.0) -> None:
+    """Block until no task runs on any executor, whatever its job group.
+    A task still running when the query returns (a killed stage's task
+    ends asynchronously) would report to accumulators that the
+    ``System.gc()`` after the query lets the ContextCleaner drop; its
+    update is then lost with "attempted to access non-existent
+    accumulator"."""
+    tracker = sc._jsc.sc().statusTracker()
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline and any(
+        e.numRunningTasks() > 0 for e in tracker.getExecutorInfos()
+    ):
+        time.sleep(0.01)
+
+
 def session_size(
     env=os.environ, cpus_available: int | None = None, ram_bytes: int | None = None
 ) -> tuple[int, str]:
@@ -457,6 +472,7 @@ def measure(
             # blocks, codegen classes) don't turn into GC pauses billed to
             # the NEXT query (measured: multi-second spikes on trivial
             # queries late in the run without this)
+            _wait_for_tasks(spark.sparkContext)
             spark.catalog.clearCache()
             spark._jvm.System.gc()
         pass_idx += 1

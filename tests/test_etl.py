@@ -4,6 +4,7 @@
 import datetime as dt
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.etl import (
@@ -13,7 +14,8 @@ from yandex_tracker_exporter_spark.etl import (
     transform_issues,
 )
 from yandex_tracker_exporter_spark.operators.dedup import latest_version_dedup
-from yandex_tracker_exporter_spark.plans.search_spec import SearchSpec, apply_search
+from yandex_tracker_exporter_spark.operators.sessionize import status_metrics
+from yandex_tracker_exporter_spark.plans.search_spec import SearchSpec
 from yandex_tracker_exporter_spark.schemas import (
     DEDUP_KEYS,
     RAW_CHANGELOG_SCHEMA,
@@ -100,11 +102,10 @@ def test_transform_changelog_flatten(spark, raw_changelog):
     assert all(r["actor"] == "actor@example.com" for r in status_rows)
 
 
-def test_transform_changelog_construction_py4j_ceiling(spark, raw_changelog):
-    """Building ``transform_changelog`` sends a fixed number of py4j
-    commands: its kernels are SQL text, one ``F.expr`` each. The
-    Column-API kernels sent ~2,500 (~1,200 per changelog value)."""
-    transform_changelog(raw_changelog)  # first call resolves JVM classes
+def _construction_commands(spark, build) -> int:
+    """py4j commands one warm ``build()`` sends (the first call resolves
+    JVM classes)."""
+    build()
     client = spark.sparkContext._gateway._gateway_client
     sent = []
     send = client.send_command
@@ -115,10 +116,34 @@ def test_transform_changelog_construction_py4j_ceiling(spark, raw_changelog):
 
     client.send_command = counting
     try:
-        transform_changelog(raw_changelog)
+        build()
     finally:
         del client.send_command
-    assert 0 < len(sent) <= 60, len(sent)
+    return len(sent)
+
+
+def test_transform_changelog_construction_py4j_ceiling(spark, raw_changelog):
+    """Building ``transform_changelog`` sends a fixed number of py4j
+    commands: its kernels are SQL text, one ``F.expr`` each. The
+    Column-API kernels sent ~2,500 (~1,200 per changelog value)."""
+    sent = _construction_commands(spark, lambda: transform_changelog(raw_changelog))
+    assert 0 < sent <= 60, sent
+
+
+def test_transform_issues_construction_py4j_ceiling(spark, raw_issues, raw_changelog):
+    """``transform_issues`` is built from SQL text, its ~30-column
+    projection in one ``selectExpr``: 160 py4j commands on the fixtures,
+    2,282 when its kernels and projection were Column-API chains."""
+    sent = _construction_commands(spark, lambda: transform_issues(raw_issues, raw_changelog))
+    assert 0 < sent <= 200, sent
+
+
+def test_status_metrics_construction_py4j_ceiling(spark, raw_issues, raw_changelog):
+    """``status_metrics`` is built from SQL text, its ``status_name`` and
+    ``human_readable_*`` kernels included: 102 py4j commands on the
+    fixtures, 2,885 when they were Column-API chains."""
+    sent = _construction_commands(spark, lambda: status_metrics(raw_changelog, raw_issues))
+    assert 0 < sent <= 130, sent
 
 
 def test_moved_event_ties_pick_the_same_row(spark, raw_issues):
@@ -233,6 +258,32 @@ def test_run_etl_failed_write_waits_for_the_others_and_keeps_watermark(
     assert _final_views(spark, out) == _final_views(spark, tmp_path / "clean")
 
 
+def test_run_etl_failed_build_waits_for_the_others_and_keeps_watermark(
+    spark, raw_issues, raw_changelog, tmp_path
+):
+    """Each table's plan is built in its writer thread. When the issues
+    build fails analysis, run_etl raises that error only after the
+    changelog and metrics writes finished, and the stored watermark does
+    not move."""
+    out = tmp_path / "wh"
+    state_path = str(tmp_path / "state.json")
+    stored = dt.datetime(2023, 1, 1)
+    state = FileStateStore(state_path)
+    state.set("issues", stored)
+    state.flush()
+
+    with pytest.raises(AnalysisException, match="missing"):
+        run_etl(
+            raw_issues, raw_changelog, str(out), state=state,
+            extra_columns={"x": F.col("missing")},
+        )
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    for table in ("issues_changelog", "issue_metrics"):
+        assert (out / table / "_SUCCESS").exists(), table
+    assert not (out / "issues").exists()
+    assert FileStateStore(state_path).get("issues") == stored
+
+
 def test_run_etl_skips_empty_up_to_date_and_unparseable_batches(
     spark, raw_issues, raw_changelog, tmp_path
 ):
@@ -261,9 +312,10 @@ def test_run_etl_skips_empty_up_to_date_and_unparseable_batches(
     assert not out.exists()
 
 
-#: jobs one run_etl over the fixtures launched before the empty and
-#: up-to-date checks became one aggregate
-PARENT_RUN_JOBS = 19
+#: jobs one run_etl over the fixtures launches: 19 before the empty and
+#: up-to-date checks became one aggregate, 18 before the semi-join keys
+#: lost their distinct (one shuffle job per write plan)
+RUN_JOBS = 15
 
 
 def test_run_etl_jobs_carry_the_callers_job_group(spark, raw_issues, raw_changelog, tmp_path):
@@ -286,7 +338,7 @@ def test_run_etl_jobs_carry_the_callers_job_group(spark, raw_issues, raw_changel
         sc._jsc.clearJobGroup()
     jobs = sorted(tracker.getJobIdsForGroup("etl-run"))
     assert jobs == list(range(first + 1, last))
-    assert len(jobs) <= PARENT_RUN_JOBS - 1, len(jobs)
+    assert len(jobs) <= RUN_JOBS, len(jobs)
 
 
 ANSI = "spark.sql.ansi.enabled"
@@ -368,14 +420,16 @@ def test_run_etl_final_views_do_not_depend_on_ansi_mode(
     assert views["false"] == views["true"]
 
 
-def test_ansi_mode_changes_malformed_dates_and_the_updated_filter(spark, raw_issues):
+def test_ansi_mode_changes_malformed_dates_and_the_updated_filter(
+    spark, raw_issues, raw_changelog, tmp_path
+):
     """How ANSI mode treats a malformed raw value in run_etl (recorded
-    under ROADMAP 7(b)). A malformed ``start``/``end``/``deadline``
-    becomes NULL under both modes (``try_cast``). An unparseable
-    ``updatedAt`` still depends on the mode: ANSI off, the mode
-    ``get_spark`` sets, it fails the search filter's comparison, so the
-    issue is dropped; ANSI on, the comparison's cast raises
-    CAST_INVALID_INPUT, so the whole run fails."""
+    under ROADMAP 7(b)): it no longer does. A malformed
+    ``start``/``end``/``deadline`` becomes NULL under both modes
+    (``try_cast``). The watermark search filter compares the parsed
+    ``updatedAt``, so an unparseable one drops the issue under both
+    modes; it used to cast the raw string, which raised
+    CAST_INVALID_INPUT with ANSI on."""
     bad = (
         raw_issues.where(F.col("key") == "TEST-1")
         .withColumn("start", F.lit("2024-13-45"))
@@ -390,13 +444,8 @@ def test_ansi_mode_changes_malformed_dates_and_the_updated_filter(spark, raw_iss
             spark.conf.set(ANSI, mode)
             got = [tuple(r[c] for c in dates) for r in transform_issues(bad).collect()]
             assert got == [(None, None, None)], mode
-
-        spark.conf.set(ANSI, "false")
-        assert apply_search(bad, BACKFILL, queue_col="queue.key", updated_col="updatedAt").count() == 0
-
-        spark.conf.set(ANSI, "true")
-        with pytest.raises(Exception, match="CAST_INVALID_INPUT.*'garbage'"):
-            apply_search(bad, BACKFILL, queue_col="queue.key", updated_col="updatedAt").count()
+            got = run_etl(bad, raw_changelog, str(tmp_path / mode), search=BACKFILL)
+            assert got == EtlResult(0, 0, 0, None, skipped=True), mode
     finally:
         spark.conf.set(ANSI, before)
 

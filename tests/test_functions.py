@@ -24,9 +24,11 @@ from yandex_tracker_exporter_spark.functions.changelog import (
     extract_changelog_value,
 )
 from yandex_tracker_exporter_spark.functions.datetimes import (
+    HUMAN_TIME_UNITS,
     TRACKER_DT_FORMAT,
     TRACKER_DT_FORMAT_NOTZ,
 )
+from yandex_tracker_exporter_spark.functions.text import EMOJI_PATTERN, SNAKE_RULES
 
 
 def _eval(spark, col, rows=None, schema="value string"):
@@ -66,7 +68,7 @@ SNAKE_CASES = [
 
 def test_to_snake_case(spark):
     rows = [(t,) for t, _ in SNAKE_CASES]
-    got = _eval(spark, to_snake_case(F.col("value")), rows)
+    got = _eval(spark, to_snake_case("value"), rows)
     expected = [e for _, e in SNAKE_CASES]
     assert got == expected
 
@@ -74,7 +76,7 @@ def test_to_snake_case(spark):
 # --- P3 string_normalize (test_helpers.py:235-243)
 def test_string_normalize(spark):
     rows = [("normalized",), ("emoji\U0001f60e",), ("mid\U0001f680dle",)]
-    got = _eval(spark, string_normalize(F.col("value")), rows)
+    got = _eval(spark, string_normalize("value"), rows)
     assert got == ["normalized", "emoji", "middle"]
 
 
@@ -390,7 +392,7 @@ HUMAN_CASES = [
 def test_to_human_time(spark):
     for seconds, verbosity, expected in HUMAN_CASES:
         df = spark.createDataFrame([(seconds,)], "value long")
-        got = df.select(to_human_time(F.col("value"), verbosity)).collect()[0][0]
+        got = df.select(to_human_time("value", verbosity)).collect()[0][0]
         assert got == expected, f"{seconds} v{verbosity}"
 
 
@@ -591,6 +593,90 @@ def test_tracker_kernels_match_column_references(spark):
             # non-vacuous: every layout parses, and so do the signed years
             parsed = {r.value for r in out if r.p is not None}
             assert set(_DT_VALUES[:11]) | {"-2023-01-01", "+12023-01-01T10:00:00"} <= parsed
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+# --- Column-API references of the SQL-text snake_case and human-time
+# kernels: the expression each kernel renders, built op by op.
+def _to_snake_case_ref(col: Column | str) -> Column:
+    c = F.col(col) if isinstance(col, str) else col
+    out = c
+    for pattern, replacement in SNAKE_RULES:
+        out = F.regexp_replace(out, pattern, replacement)
+    out = F.lower(out)
+    return F.when(F.trim(c) == "", F.trim(c)).otherwise(out)
+
+
+def _to_human_time_ref(col: Column | str, verbosity: int = 2) -> Column:
+    c = (F.col(col) if isinstance(col, str) else col).cast("long")
+    total = F.abs(c)
+    parts = []
+    remainder = total
+    for name, count in HUMAN_TIME_UNITS:
+        value = F.floor(remainder / F.lit(count)).cast("long")
+        parts.append(F.struct(value.alias("v"), F.lit(name).alias("n")))
+        remainder = remainder % F.lit(count)
+    decomposed = F.filter(F.array(*parts), lambda x: x["v"] > 0)
+    top = F.slice(decomposed, 1, verbosity)
+    joined = F.array_join(
+        F.transform(top, lambda x: F.concat(x["v"].cast("string"), x["n"])), " "
+    )
+    return (
+        F.when(c == 0, F.lit("0s"))
+        .when(c < 0, F.concat(F.lit("-"), joined))
+        .otherwise(joined)
+    )
+
+
+_SNAKE_VALUES = [None, "", " ", "\t \n", "_", "-", "a b", "ab", "AB", "\U0001f680x"] + [
+    # every lower/upper/digit boundary, Latin and Cyrillic on both sides
+    a + b
+    for a in ("a", "z", "A", "Z", "я", "ё", "Я", "Ё", "0", "9", "_", "-")
+    for b in ("b", "B", "ж", "Ж", "ё", "Ё", "1", "0", " ", ".")
+] + [t for t, _ in SNAKE_CASES] + ["x$1y", "a\\b", "Ünïcödé", "ÀbC1d"]
+_SECONDS = [None, 0, 1, -1, -59, -60, -61, -86401, -31104000, -(10**12)] + [
+    # unit boundaries, each side, and spans of a year or more
+    n * count + d
+    for _, count in HUMAN_TIME_UNITS
+    for n in (1, 2)
+    for d in (-1, 0, 1)
+] + [31104000 + 2592000 + 604800 + 86400 + 3600 + 60 + 1, 10**10, 2**62]
+
+
+def test_snake_case_and_human_time_kernels_match_column_references(spark):
+    """The SQL-text ``to_snake_case``, ``string_normalize`` and
+    ``to_human_time`` equal their Column-API references with ANSI mode
+    off, on, and on with double-quoted identifiers."""
+    words = spark.createDataFrame([(v,) for v in _SNAKE_VALUES], "value string")
+    seconds = spark.createDataFrame([(v,) for v in _SECONDS], "value long")
+    keys = ("spark.sql.ansi.enabled", "spark.sql.ansi.doubleQuotedIdentifiers")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for ansi, dq in (("false", "false"), ("true", "false"), ("true", "true")):
+            spark.conf.set(keys[0], ansi)
+            spark.conf.set(keys[1], dq)
+            out = words.select(
+                to_snake_case("value").alias("s"),
+                _to_snake_case_ref(F.col("value")).alias("s_ref"),
+                string_normalize("value").alias("n"),
+                F.regexp_replace("value", EMOJI_PATTERN, "").alias("n_ref"),
+            ).collect()
+            assert len(out) == len(_SNAKE_VALUES)
+            for r in out:
+                assert (r.s, r.n) == (r.s_ref, r.n_ref), (ansi, dq, r)
+            assert {r.s for r in out} >= {None, "", "a_1", "я_1", "9_b", "a_ж", "я_b"}
+            for verbosity in (1, 2, 3, 7):
+                out = seconds.select(
+                    "value",
+                    to_human_time("value", verbosity).alias("h"),
+                    _to_human_time_ref(F.col("value"), verbosity).alias("h_ref"),
+                ).collect()
+                assert len(out) == len(_SECONDS)
+                for r in out:
+                    assert r.h == r.h_ref, (ansi, dq, verbosity, r)
+            assert {r.h for r in out} >= {"0s", "-1s", "1y", "1y 1mo 1w 1d 1h 1m 1s"}
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

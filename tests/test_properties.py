@@ -7,7 +7,6 @@ round-trips off the hot path.
 import datetime as dt
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from tests.business_reference import business_seconds_pandas_udf
 from yandex_tracker_exporter_spark.functions.business import business_seconds
@@ -54,7 +53,7 @@ def test_human_time_expression_matches_python(spark):
         + [-1, -60, -86401, 123456789, 10**10]
     )
     df = spark.createDataFrame([(s,) for s in samples], "v long")
-    got = [r[0] for r in df.select(to_human_time(F.col("v"), 2)).collect()]
+    got = [r[0] for r in df.select(to_human_time("v", 2)).collect()]
 
     units = [("y", 31104000), ("mo", 2592000), ("w", 604800), ("d", 86400),
              ("h", 3600), ("m", 60), ("s", 1)]

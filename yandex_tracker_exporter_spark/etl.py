@@ -7,7 +7,7 @@ changelog, schemas in ``schemas.py``):
 
 - ``transform_issues``    — the wide ~30-column projection
   (``TrackerIssue._transform``, ``models/issue.py:74-107``) as one
-  ``select`` of column expressions (P1-P5, P10-P11), plus the
+  ``selectExpr`` of SQL text (P1-P5, P10-P11), plus the
   changelog-derived moved-event (P12) and closed_at refinement
   (``issue.py:203-210``) as two small left joins.
 - ``transform_changelog`` — the event-log flattening
@@ -16,12 +16,15 @@ changelog, schemas in ``schemas.py``):
 - ``status_metrics``      — per-(issue,status) cycle times (A1), in
   ``operators/sessionize.py``.
 
+All three are built from SQL text, the kernels included, so a build
+sends at most a couple of hundred py4j commands, not thousands.
+
 ``run_etl`` wires them with the incremental search spec (F1), watermark
 state (S8/ST2/ST7) and versioned sinks (O1/O2) — the full reference
 lifecycle (``etl.py:203-264``) as one idempotent batch. One aggregate
 job over the filtered raw issues decides both short-circuits (F4 empty,
-F5 up to date); the three table writes are independent, so they run at
-the same time, one driver thread each.
+F5 up to date); the three tables are independent, so each one is built
+and written in its own driver thread, all at the same time.
 
 Extension surface (U1, ``examples/extended_model/main.py:8-31``): pass
 ``extra_columns={name: Column}`` — appended to the projection exactly
@@ -32,9 +35,10 @@ from __future__ import annotations
 
 import datetime as dt
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark import InheritableThread
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -42,8 +46,10 @@ from yandex_tracker_exporter_spark.functions.changelog import extract_changelog_
 from yandex_tracker_exporter_spark.functions.datetimes import (
     parse_tracker_datetime,
     parse_tracker_datetime_sql,
+    sql_in,
+    sql_string,
 )
-from yandex_tracker_exporter_spark.functions.text import string_normalize, to_snake_case
+from yandex_tracker_exporter_spark.functions.text import string_normalize_sql, to_snake_case_sql
 from yandex_tracker_exporter_spark.operators.sessionize import (
     closed_at_refinement,
     status_metrics,
@@ -58,11 +64,6 @@ from yandex_tracker_exporter_spark.sources.sinks import write_versioned
 from yandex_tracker_exporter_spark.sources.state import FileStateStore
 
 
-def _low(c: Column) -> Column:
-    """P1's lowercase-on-extract semantic (``validate_resource`` low=True)."""
-    return F.lower(c)
-
-
 def transform_issues(
     raw_issues: DataFrame,
     raw_changelog: DataFrame | None = None,
@@ -72,62 +73,54 @@ def transform_issues(
     """RAW_ISSUE_SCHEMA → ISSUES_SCHEMA wide projection (minus version).
 
     Every per-row Python getattr walk in the reference becomes a struct
-    field access; missing structs yield null automatically (P1). A
+    field access; missing structs yield null automatically (P1). Names
+    are lowercased on extract (P1's ``validate_resource`` low=True). A
     malformed ``start``/``end``/``deadline`` becomes NULL under either
-    ANSI mode (``try_cast``).
+    ANSI mode (``try_cast``). The projection is SQL text, one
+    ``selectExpr``, like ``transform_changelog``.
     """
-    resolution = to_snake_case(_low(F.col("resolution.name")))
-    status = to_snake_case(_low(F.col("status.name")))
-    is_resolved = resolution.isNotNull()
-    is_closed = status.isin(*config.closed_statuses) | is_resolved
-    resolved_at = parse_tracker_datetime("resolvedAt")
-
-    flat = raw_issues.select(
-        F.col("queue.key").alias("queue"),
-        F.col("key").alias("issue_key"),
-        string_normalize(F.col("summary")).alias("title"),
-        to_snake_case(_low(F.col("type.name"))).alias("issue_type"),
-        _low(F.col("priority.name")).alias("priority"),
-        _low(F.col("assignee.email")).alias("assignee"),
-        _low(F.col("createdBy.email")).alias("author"),
-        status.alias("status"),
-        resolution.alias("resolution"),
-        F.coalesce(F.col("tags"), F.array().cast("array<string>")).alias("tags"),
-        F.coalesce(
-            F.transform(F.col("components"), lambda c: c["name"]),
-            F.array().cast("array<string>"),
-        ).alias("components"),
-        is_resolved.alias("is_resolved"),
-        is_closed.alias("is_closed"),
-        parse_tracker_datetime("createdAt").alias("created_at"),
-        parse_tracker_datetime("updatedAt").alias("updated_at"),
-        resolved_at.alias("resolved_at"),
-        F.when(is_resolved, resolved_at).alias("closed_at"),
-        F.col("start").try_cast("date").alias("start_date"),
-        F.col("end").try_cast("date").alias("end_date"),
-        F.col("deadline").try_cast("date").alias("deadline"),
-        F.coalesce(F.col("storyPoints"), F.lit(0.0)).cast("float").alias("story_points"),
-        F.col("parent.key").alias("parent_issue_key"),
-        F.col("epic.key").alias("epic_issue_key"),
-        F.col("parent.key").isNotNull().alias("is_subtask"),
-        _low(F.col("qaEngineer.email")).alias("qa_engineer"),
-        F.coalesce(F.col("aliases"), F.array().cast("array<string>")).alias("aliases"),
-        _low(F.col("project.name")).alias("project"),
-        F.coalesce(
-            F.transform(F.col("sprint"), lambda s: s["name"]),
-            F.array().cast("array<string>"),
-        ).alias("sprints"),
+    resolution = to_snake_case_sql("lower(resolution.name)")
+    status = to_snake_case_sql("lower(status.name)")
+    is_resolved = f"({resolution}) IS NOT NULL"
+    resolved_at = parse_tracker_datetime_sql("resolvedAt")
+    empty = "CAST(array() AS array<string>)"
+    flat = raw_issues.selectExpr(
+        "queue.key AS queue",
+        "key AS issue_key",
+        f"{string_normalize_sql('summary')} AS title",
+        f"{to_snake_case_sql('lower(type.name)')} AS issue_type",
+        "lower(priority.name) AS priority",
+        "lower(assignee.email) AS assignee",
+        "lower(createdBy.email) AS author",
+        f"{status} AS status",
+        f"{resolution} AS resolution",
+        f"coalesce(tags, {empty}) AS tags",
+        f"coalesce(transform(components, _c -> _c.name), {empty}) AS components",
+        f"{is_resolved} AS is_resolved",
+        f"{sql_in(status, config.closed_statuses)} OR {is_resolved} AS is_closed",
+        f"{parse_tracker_datetime_sql('createdAt')} AS created_at",
+        f"{parse_tracker_datetime_sql('updatedAt')} AS updated_at",
+        f"{resolved_at} AS resolved_at",
+        f"CASE WHEN {is_resolved} THEN {resolved_at} END AS closed_at",
+        "try_cast(`start` AS DATE) AS start_date",
+        "try_cast(`end` AS DATE) AS end_date",
+        "try_cast(deadline AS DATE) AS deadline",
+        "CAST(coalesce(storyPoints, 0.0D) AS FLOAT) AS story_points",
+        "parent.key AS parent_issue_key",
+        "epic.key AS epic_issue_key",
+        "parent.key IS NOT NULL AS is_subtask",
+        "lower(qaEngineer.email) AS qa_engineer",
+        f"coalesce(aliases, {empty}) AS aliases",
+        "lower(project.name) AS project",
+        f"coalesce(transform(sprint, _s -> _s.name), {empty}) AS sprints",
     )
 
     if raw_changelog is not None:
         flat = _apply_moved_events(flat, raw_changelog, config)
         flat = _apply_closed_at_refinement(flat, raw_changelog, config)
     else:
-        flat = (
-            flat.withColumn("was_moved", F.lit(False))
-            .withColumn("moved_at", F.lit(None).cast("timestamp"))
-            .withColumn("moved_by", F.lit(None).cast("string"))
-        )
+        flat = flat.selectExpr("*", "false AS was_moved", "CAST(NULL AS TIMESTAMP) AS moved_at",
+                               "CAST(NULL AS STRING) AS moved_by")
 
     for name, col in (extra_columns or {}).items():
         flat = flat.withColumn(name, col)
@@ -145,26 +138,22 @@ def _apply_moved_events(
     task or a different input order picks the same row.
     """
     moved = (
-        raw_changelog.where(F.col("type") == config.moved_event_type)
-        .select(
+        raw_changelog.where(f"type = {sql_string(config.moved_event_type)}")
+        .selectExpr(
             "issue_key",
-            parse_tracker_datetime("updatedAt").alias("_moved_at"),
-            _low(F.col("updatedBy.email")).alias("_moved_by"),
+            f"{parse_tracker_datetime_sql('updatedAt')} AS _moved_at",
+            "lower(updatedBy.email) AS _moved_by",
         )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("issue_key").orderBy(
-                    F.col("_moved_at").desc(), F.col("_moved_by").asc_nulls_last()
-                )
-            ),
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY issue_key "
+            "ORDER BY _moved_at DESC, _moved_by ASC NULLS LAST) AS _rn",
         )
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+        .where("_rn = 1")
     )
     return issues_flat.join(moved, "issue_key", "left").select(
         issues_flat["*"],
-        F.col("_moved_at").isNotNull().alias("was_moved"),
+        F.expr("_moved_at IS NOT NULL AS was_moved"),
         F.col("_moved_at").alias("moved_at"),
         F.col("_moved_by").alias("moved_by"),
     )
@@ -177,14 +166,15 @@ def _apply_closed_at_refinement(
     resolved_at (already set); else latest transition into a closed
     status, only while the issue's current status is closed."""
     candidates = closed_at_refinement(raw_changelog, config)
-    joined = issues_flat.join(candidates, "issue_key", "left")
-    refined = F.when(F.col("is_resolved"), F.col("closed_at")).otherwise(
-        F.when(
-            F.col("status").isin(*config.closed_statuses),
-            F.col("closed_at_candidate"),
-        )
+    refined = (
+        "CASE WHEN is_resolved THEN closed_at "
+        f"WHEN {sql_in('status', config.closed_statuses)} THEN closed_at_candidate END"
     )
-    return joined.withColumn("closed_at", refined).drop("closed_at_candidate")
+    return (
+        issues_flat.join(candidates, "issue_key", "left")
+        .withColumn("closed_at", F.expr(refined))
+        .drop("closed_at_candidate")
+    )
 
 
 def transform_changelog(
@@ -223,20 +213,20 @@ def transform_changelog(
     )
 
 
-def _write_concurrently(spark: SparkSession, writes: list[tuple]) -> None:
-    """``write_versioned(*args)`` for each entry, each from its own
-    driver thread so Spark schedules the jobs at the same time. The
-    threads inherit the caller's job group, description and pool. Waits
-    for every write, then raises the first failure in list order."""
-    errors: list[BaseException | None] = [None] * len(writes)
+def _run_concurrently(spark: SparkSession, tasks: list) -> None:
+    """Call each task from its own driver thread, so their plan builds
+    and Spark jobs overlap. The threads inherit the caller's job group,
+    description and pool. Waits for every task, then raises the first
+    failure in list order."""
+    errors: list[BaseException | None] = [None] * len(tasks)
 
-    def write(i: int) -> None:
+    def run(i: int) -> None:
         try:
-            write_versioned(*writes[i])
+            tasks[i]()
         except BaseException as exc:  # re-raised on the caller's thread
             errors[i] = exc
 
-    threads = [InheritableThread(write, args=(i,), session=spark) for i in range(len(writes))]
+    threads = [InheritableThread(run, args=(i,), session=spark) for i in range(len(tasks))]
     for t in threads:
         t.start()
     for t in threads:
@@ -268,20 +258,21 @@ def run_etl(
     """One full incremental run (reference ``YandexTrackerETL.run``).
 
     Order of operations preserves the reference's exactly-once-ish
-    contract (ST7): filter → one check job (row count and candidate
-    watermark; F4/F5) → transform → write all three tables at the same
-    time → only then commit the watermark. If a write fails, the error
-    is raised after the other writes finish and the watermark is left
-    as it was.
+    contract (ST7): filter on the parsed ``updatedAt`` → one check job
+    (row count and candidate watermark; F4/F5) → build and write all
+    three tables at the same time, each in its own thread → only then
+    commit the watermark. If a build or a write fails, the error is
+    raised after the other writes finish and the watermark is left as
+    it was.
     """
     if search is None and state is not None:
         search = SearchSpec(watermark=state.get(state_key))
     if search is not None:
-        raw_issues = apply_search(
-            raw_issues, search, queue_col="queue.key", updated_col="updatedAt"
-        )
-        # changelog follows the filtered issue set
-        keys = raw_issues.select(F.col("key").alias("issue_key")).distinct()
+        raw_issues = apply_search(raw_issues, search, queue_col="queue.key",
+                                  updated_col=parse_tracker_datetime_sql("updatedAt"))
+        # changelog follows the filtered issue set; a semi join ignores
+        # duplicate keys, so no distinct (and its shuffle) is needed
+        keys = raw_issues.select(F.col("key").alias("issue_key"))
         raw_changelog = raw_changelog.join(F.broadcast(keys), "issue_key", "left_semi")
 
     # F4 and F5 from one aggregate over the filtered raw issues, with the
@@ -296,34 +287,25 @@ def run_etl(
     if is_up_to_date(candidate, stored):  # F5 short-circuit
         return EtlResult(0, 0, 0, stored, skipped=True)
 
-    tables = (
-        ("issues", "issues", "updated_at",
-         transform_issues(raw_issues, raw_changelog, config, extra_columns)),
-        ("changelog", "issues_changelog", "event_time", transform_changelog(raw_changelog, config)),
-        ("metrics", "issue_metrics", "last_seen", status_metrics(raw_changelog, raw_issues, config)),
-    )
+    tables = {
+        "issues": ("updated_at",
+                   partial(transform_issues, raw_issues, raw_changelog, config, extra_columns)),
+        "issues_changelog": ("event_time", partial(transform_changelog, raw_changelog, config)),
+        "issue_metrics": ("last_seen", partial(status_metrics, raw_changelog, raw_issues, config)),
+    }
     # A3 run counters ride the write jobs as observed metrics — no extra
     # counting actions (the reference pays a python statement per row).
-    obs = {name: Observation(f"etl_{name}") for name, *_ in tables}
+    obs = {table: Observation(f"etl_{table}") for table in tables}
     version = F.current_timestamp()
-    _write_concurrently(
-        raw_issues.sparkSession,
-        [
-            (
-                df.observe(obs[name], F.count(F.lit(1)).alias("n")).withColumn("version", version),
-                f"{output_dir}/{table}",
-                DEDUP_KEYS[table],
-                ts_col,
-            )
-            for name, table, ts_col, df in tables
-        ],
-    )
+
+    def write(table: str) -> None:  # in the table's own thread, build included
+        ts_col, transform = tables[table]
+        df = transform().observe(obs[table], F.count(F.lit(1)).alias("n"))
+        write_versioned(df.withColumn("version", version), f"{output_dir}/{table}",
+                        DEDUP_KEYS[table], ts_col)
+
+    _run_concurrently(raw_issues.sparkSession, [partial(write, table) for table in tables])
     if state is not None:  # ST7 commit-after-write; a None candidate took F5
         state.set(state_key, candidate)
         state.flush()
-    return EtlResult(
-        obs["issues"].get["n"],
-        obs["changelog"].get["n"],
-        obs["metrics"].get["n"],
-        candidate,
-    )
+    return EtlResult(*(obs[table].get["n"] for table in tables), candidate)

@@ -35,7 +35,7 @@ def _qident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _business_seconds_sql(
+def business_seconds_sql(
     start: str,
     end: str,
     workdays: tuple[int, ...],
@@ -146,6 +146,6 @@ def business_seconds(
     width — no span cap.
     """
     return F.expr(
-        _business_seconds_sql(start, end, workdays, hour_start, hour_end, holiday_dates)
+        business_seconds_sql(start, end, workdays, hour_start, hour_end, holiday_dates)
     )
 

@@ -6,10 +6,10 @@ are real ``TimestampType`` end-to-end and formatting happens only at the
 edges. The session timezone is UTC (set in ``session.py``), matching the
 reference's default storage timezone.
 
-``parse_tracker_datetime`` is rendered as SQL text and parsed JVM-side
-by one ``F.expr``: a Column-API chain of the same expression costs
-~100 py4j round trips per call. Its test-side Column-API reference
-lives in ``tests/test_functions.py``.
+``parse_tracker_datetime`` and ``to_human_time`` are rendered as SQL text
+and parsed JVM-side by one ``F.expr``: a Column-API chain of the same
+expression costs ~100 py4j round trips per call. Their test-side
+Column-API references live in ``tests/test_functions.py``.
 """
 
 from __future__ import annotations
@@ -54,6 +54,11 @@ def sql_string(value: str) -> str:
     double-quoted one: under ``spark.sql.ansi.doubleQuotedIdentifiers``
     that would name a column."""
     return "'" + value.replace("'", "''") + "'"
+
+
+def sql_in(expr: str, values) -> str:
+    """``expr IN (values)`` as SQL text; ``false`` if empty, like ``isin()``."""
+    return f"({expr}) IN ({', '.join(map(sql_string, values))})" if values else "false"
 
 
 def parse_tracker_datetime_sql(expr: str) -> str:
@@ -123,31 +128,29 @@ HUMAN_TIME_UNITS: tuple[tuple[str, int], ...] = (
 )
 
 
-def to_human_time(col: Column | str, verbosity: int = 2) -> Column:
+def to_human_time_sql(expr: str, verbosity: int = 2) -> str:
+    """SQL text of :func:`to_human_time` over the SQL expression ``expr``."""
+    c = f"CAST({expr} AS BIGINT)"
+    remainder = f"abs({c})"
+    parts = []
+    for name, count in HUMAN_TIME_UNITS:
+        value = f"CAST(floor({remainder} / {count}) AS BIGINT)"
+        parts.append(f"named_struct('v', {value}, 'n', {sql_string(name)})")
+        remainder = f"({remainder} % {count})"
+    top = f"slice(filter(array({', '.join(parts)}), _u -> _u.v > 0), 1, {verbosity})"
+    joined = f"array_join(transform({top}, _u -> concat(CAST(_u.v AS STRING), _u.n)), ' ')"
+    return f"CASE WHEN {c} = 0 THEN '0s' WHEN {c} < 0 THEN concat('-', {joined}) ELSE {joined} END"
+
+
+def to_human_time(expr: str, verbosity: int = 2) -> Column:
     """Seconds → ``"2w 3d"`` (top-``verbosity`` units, negative-aware; P7).
 
-    Pure expression: greedy unit decomposition of ``abs(seconds)``, keep
-    non-zero units in order, take the first ``verbosity``, join with
-    spaces; 0 → ``"0s"``; negative gets a ``-`` prefix.
+    ``expr`` is SQL expression text, e.g. a column name. Pure expression:
+    greedy unit decomposition of ``abs(seconds)``, keep non-zero units in
+    order, take the first ``verbosity``, join with spaces; 0 → ``"0s"``;
+    negative gets a ``-`` prefix.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("long")
-    total = F.abs(c)
-    parts = []
-    remainder = total
-    for name, count in HUMAN_TIME_UNITS:
-        value = F.floor(remainder / F.lit(count)).cast("long")
-        parts.append(F.struct(value.alias("v"), F.lit(name).alias("n")))
-        remainder = remainder % F.lit(count)
-    decomposed = F.filter(F.array(*parts), lambda x: x["v"] > 0)
-    top = F.slice(decomposed, 1, verbosity)
-    joined = F.array_join(
-        F.transform(top, lambda x: F.concat(x["v"].cast("string"), x["n"])), " "
-    )
-    return (
-        F.when(c == 0, F.lit("0s"))
-        .when(c < 0, F.concat(F.lit("-"), joined))
-        .otherwise(joined)
-    )
+    return F.expr(to_human_time_sql(expr, verbosity))
 
 
 #: Binary-prefix units of ``bytes_to_human`` (``helpers.py:301-320``).
@@ -164,7 +167,7 @@ def bytes_to_human(col: Column | str, granularity: int = 2) -> Column:
     """Bytes → ``"1MB, 24KB"`` (P14, reference ``helpers.py:301-320``):
     greedy binary-prefix decomposition, top ``granularity`` non-zero
     units joined with ``", "``. 0 bytes → ``"0"`` (the reference returns
-    the int 0 there; this is its string form). Same construction as
+    the int 0 there; this is its string form). Same decomposition as
     :func:`to_human_time`; exact for values below 2^53 (≈ 8 PB — the
     float division in ``floor`` is the only non-integer step).
     """

@@ -9,12 +9,17 @@ capture-group substitutions, which are equivalent here because each
 boundary rule's two character classes are disjoint (no overlapping
 matches possible) — and capture groups also run on RE2-based engines
 (DuckDB oracle parity).
+
+Both kernels are SQL text parsed by one ``F.expr``, like the datetime
+kernels; their Column-API references live in ``tests/test_functions.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from yandex_tracker_exporter_spark.functions.datetimes import sql_string
 
 # Boundary rules, applied in order, then lowercased:
 #   lower-letter→UPPER-letter, lower-letter→digit, digit→lower-letter
@@ -29,18 +34,22 @@ SNAKE_RULES: tuple[tuple[str, str], ...] = (
 )
 
 
-def to_snake_case(col: Column | str) -> Column:
+def to_snake_case_sql(expr: str) -> str:
+    """SQL text of :func:`to_snake_case` over the SQL expression ``expr``."""
+    out = expr
+    for pattern, replacement in SNAKE_RULES:
+        out = f"regexp_replace({out}, {sql_string(pattern)}, {sql_string(replacement)})"
+    return f"CASE WHEN trim({expr}) = '' THEN trim({expr}) ELSE lower({out}) END"
+
+
+def to_snake_case(expr: str) -> Column:
     """camel/Pascal/kebab/space → snake_case; Cyrillic-aware (P2).
 
+    ``expr`` is SQL expression text, e.g. ``"lower(status.name)"``.
     null → null; blank/whitespace-only → empty string (the reference
     returns ``text.strip()`` for blank input, ``helpers.py:108-109``).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    out = c
-    for pattern, replacement in SNAKE_RULES:
-        out = F.regexp_replace(out, pattern, replacement)
-    out = F.lower(out)
-    return F.when(F.trim(c) == "", F.trim(c)).otherwise(out)
+    return F.expr(to_snake_case_sql(expr))
 
 
 #: Emoji codepoint ranges stripped by the reference (``helpers.py:249-258``):
@@ -55,10 +64,14 @@ EMOJI_PATTERN = (
 )
 
 
-def string_normalize(col: Column | str) -> Column:
-    """Strip emoji ranges from a string (P3, used on issue titles)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, EMOJI_PATTERN, "")
+def string_normalize_sql(expr: str) -> str:
+    """SQL text of :func:`string_normalize` over the SQL expression ``expr``."""
+    return f"regexp_replace({expr}, {sql_string(EMOJI_PATTERN)}, '')"
+
+
+def string_normalize(expr: str) -> Column:
+    """Strip emoji ranges from the SQL expression ``expr`` (P3, titles)."""
+    return F.expr(string_normalize_sql(expr))
 
 
 #: Latin-1 / Latin Extended-A accent fold table shared by engine and

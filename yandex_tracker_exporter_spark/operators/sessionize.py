@@ -32,12 +32,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.config import DEFAULT_CONFIG, EngineConfig
-from yandex_tracker_exporter_spark.functions.business import business_seconds
+from yandex_tracker_exporter_spark.functions.business import business_seconds_sql
 from yandex_tracker_exporter_spark.functions.datetimes import (
-    parse_tracker_datetime,
-    to_human_time,
+    parse_tracker_datetime_sql,
+    sql_in,
+    sql_string,
+    to_human_time_sql,
 )
-from yandex_tracker_exporter_spark.functions.text import to_snake_case
+from yandex_tracker_exporter_spark.functions.text import to_snake_case_sql
 
 
 def sessionize_events(
@@ -86,11 +88,11 @@ def sessionize_events(
 def _status_transition_events(
     changelog: DataFrame, config: EngineConfig
 ) -> DataFrame:
-    """F6+F7+F8: keep workflow status transitions with a valid interval."""
-    return (
-        changelog.where(F.col("type") == config.workflow_event_type)  # F6
-        .where(F.size("fields") >= 2)  # F7
-        .where(F.col("fields")[0]["field"]["id"] == "status")  # F7
+    """F6+F7: keep workflow events whose first field change is the status."""
+    return changelog.where(
+        f"type = {sql_string(config.workflow_event_type)}"  # F6
+        " AND size(fields) >= 2"  # F7
+        " AND fields[0].field.id = 'status'"  # F7
     )
 
 
@@ -107,31 +109,24 @@ def _transition_intervals(
     ``corrupt_transition_events`` (NOT keep) partition the transitions.
     """
     transitions = _status_transition_events(changelog, config)
+    start = parse_tracker_datetime_sql("fields[1].`from`")
     if issues is not None:
         created = F.broadcast(
-            issues.select(
-                F.col("key").alias("issue_key"),
-                parse_tracker_datetime("createdAt").alias("_created_at"),
+            issues.selectExpr(
+                "key AS issue_key",
+                f"{parse_tracker_datetime_sql('createdAt')} AS _created_at",
             )
         )
         transitions = transitions.join(created, "issue_key", "left")
-    else:
-        transitions = transitions.withColumn(
-            "_created_at", F.lit(None).cast("timestamp")
-        )
+        start = f"coalesce({start}, _created_at)"
     return (
-        transitions.select(
+        transitions.selectExpr(
             "*",
-            F.coalesce(
-                parse_tracker_datetime("fields[1].`from`"), F.col("_created_at")
-            ).alias("_start_ts"),
-            parse_tracker_datetime("fields[1].`to`").alias("_end_ts"),
+            f"{start} AS _start_ts",
+            f"{parse_tracker_datetime_sql('fields[1].`to`')} AS _end_ts",
         )
         .drop("_created_at")
-        .withColumn(
-            "_has_interval",
-            F.col("_start_ts").isNotNull() & F.col("_end_ts").isNotNull(),
-        )
+        .selectExpr("*", "_start_ts IS NOT NULL AND _end_ts IS NOT NULL AS _has_interval")
     )
 
 
@@ -145,30 +140,16 @@ def status_metrics(
 
     ``changelog`` follows RAW_CHANGELOG_SCHEMA; ``issues`` (optional)
     provides ``createdAt`` for the initial-status fallback — joined
-    broadcast since it is only (key, createdAt).
+    broadcast since it is only (key, createdAt). Built from SQL text,
+    kernels included.
 
     Output matches ISSUE_METRICS_SCHEMA minus ``version`` (added at the
     sink): issue_key, status_name, status_transitions_count, duration,
     human_readable_duration, busdays_duration,
     human_readable_busdays_duration, last_seen.
     """
-    intervals = (
-        _transition_intervals(changelog, issues, config)
-        # F8: drop corrupt events with no usable interval
-        .where("_has_interval")
-        .select(
-            "issue_key",
-            to_snake_case(F.lower(F.col("fields")[0]["from"])).alias("status_name"),
-            F.col("_start_ts").alias("start_ts"),
-            F.col("_end_ts").alias("end_ts"),
-        )
-    )
-
-    duration = F.abs(
-        F.unix_timestamp("end_ts") - F.unix_timestamp("start_ts")
-    ).cast("long")
     busdays = (
-        business_seconds(
+        business_seconds_sql(
             "start_ts",
             "end_ts",
             workdays=config.workdays,
@@ -177,28 +158,39 @@ def status_metrics(
             holiday_dates=config.holiday_dates,
         )
         if include_busdays
-        else F.lit(0).cast("long")
+        else "CAST(0 AS BIGINT)"
     )
-
     per_status = (
-        intervals.withColumn("_duration", duration)
-        .withColumn("_busdays", busdays)
+        _transition_intervals(changelog, issues, config)
+        # F8: drop corrupt events with no usable interval
+        .where("_has_interval")
+        .selectExpr(
+            "issue_key",
+            f"{to_snake_case_sql('lower(fields[0].`from`)')} AS status_name",
+            "_start_ts AS start_ts",
+            "_end_ts AS end_ts",
+        )
+        .selectExpr(
+            "*",
+            "CAST(abs(unix_timestamp(end_ts) - unix_timestamp(start_ts)) AS BIGINT) AS _duration",
+            f"{busdays} AS _busdays",
+        )
         .groupBy("issue_key", "status_name")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("status_transitions_count"),
-            F.sum("_duration").alias("duration"),
-            F.sum("_busdays").alias("busdays_duration"),
-            F.max("end_ts").alias("last_seen"),
+            F.expr("count(1) AS status_transitions_count"),
+            F.expr("sum(_duration) AS duration"),
+            F.expr("sum(_busdays) AS busdays_duration"),
+            F.expr("max(end_ts) AS last_seen"),
         )
     )
-    return per_status.select(
+    return per_status.selectExpr(
         "issue_key",
         "status_name",
         "status_transitions_count",
         "duration",
-        to_human_time("duration").alias("human_readable_duration"),
+        f"{to_human_time_sql('duration')} AS human_readable_duration",
         "busdays_duration",
-        to_human_time("busdays_duration").alias("human_readable_busdays_duration"),
+        f"{to_human_time_sql('busdays_duration')} AS human_readable_busdays_duration",
         "last_seen",
     )
 
@@ -243,16 +235,14 @@ def closed_at_refinement(
     candidates without that gate would set closed_at on issues that
     were later reopened.
     """
-    transitions = _status_transition_events(changelog, config)
-    closed = tuple(config.closed_statuses)
-    candidates = (
-        transitions.select(
+    return (
+        _status_transition_events(changelog, config)
+        .selectExpr(
             "issue_key",
-            to_snake_case(F.lower(F.col("fields")[0]["to"])).alias("_to_status"),
-            parse_tracker_datetime("fields[1].`to`").alias("_end_ts"),
+            f"{to_snake_case_sql('lower(fields[0].`to`)')} AS _to_status",
+            f"{parse_tracker_datetime_sql('fields[1].`to`')} AS _end_ts",
         )
-        .where(F.col("_to_status").isin(*closed) & F.col("_end_ts").isNotNull())
+        .where(f"{sql_in('_to_status', config.closed_statuses)} AND _end_ts IS NOT NULL")
         .groupBy("issue_key")
-        .agg(F.max("_end_ts").alias("closed_at_candidate"))
+        .agg(F.expr("max(_end_ts) AS closed_at_candidate"))
     )
-    return candidates

@@ -56,6 +56,7 @@ def compile_search(
     updated_col: str = "updated_at",
 ) -> Column:
     """Compile the spec to one boolean Column (Catalyst pushes it down).
+    ``updated_col`` is SQL expression text, e.g. a parsed timestamp.
 
     Mode precedence mirrors ``etl.py:98-109``: raw predicate wins;
     else stateful watermark (or initial-range backfill); else the
@@ -84,7 +85,7 @@ def compile_search(
             lower_bound = now - dt.timedelta(
                 seconds=from_human_time(spec.stateful_initial_range)
             )
-        predicates.append(F.col(updated_col) >= F.lit(lower_bound))
+        predicates.append(F.expr(updated_col) >= F.lit(lower_bound))
 
     combined = predicates[0]
     for p in predicates[1:]:
