@@ -971,9 +971,10 @@ def q_decontaminate(spark, sf_dir):
     """Eval-set decontamination: every 20th document plays the held-out
     benchmark; corpus documents sharing ANY 20-gram shingle hash with it
     are dropped (the word-soup corpus shares most 9-grams, so k=20 keeps
-    the check discriminating: ~44% contaminated at sf0.01). Corpus side
-    is map-only + broadcast semi-join — the corpus never shuffles (the
-    benchmark hash set broadcasts)."""
+    the check discriminating: ~44% contaminated at sf0.01). The
+    benchmark hash set is built on the driver; the corpus side is one
+    map-only Arrow pass + a broadcast anti join — the corpus never
+    shuffles."""
     from yandex_tracker_exporter_spark.operators.decontaminate import decontaminate
 
     docs = _t_wide(spark, sf_dir, "documents")
@@ -1630,7 +1631,8 @@ def _lsh_pairs(spark, sf_dir):
 
 def _dedup_labels(spark, sf_dir):
     """MinHash+LSH pairs → connected-component labels (id, cluster_id),
-    computed once per (session, sf_dir) and eagerly localCheckpointed.
+    computed once per (session, sf_dir) and materialized (eagerly
+    checkpointed, or the driver-side finish's local relation).
     The label is the cluster's minimum doc_id — deterministic regardless
     of join/iteration order, which is what lets a recursive DuckDB CTE
     reproduce the iterative min-label propagation bit-for-bit

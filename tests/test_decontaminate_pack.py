@@ -43,15 +43,47 @@ def test_decontaminate_plan_is_broadcast_no_corpus_shuffle(spark):
         decontaminate(corpus, bench)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    # both the semi (contamination probe) and anti (survivor) joins must
-    # be broadcast hash joins — the corpus side never shuffles on a key
-    assert "BroadcastHashJoin LeftSemi".lower() in plan.lower().replace("[", " ").replace(
-        "]", " "
-    ) or "LeftSemi, BuildRight" in plan
-    assert "LeftAnti" in plan
+    # one Python pass over the corpus (the benchmark is hashed on the
+    # driver), no shingle explode, and the survivor anti join is a
+    # broadcast hash join — the corpus side never shuffles on a key
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Generate" not in plan
+    assert "LeftAnti, BuildRight" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
+
+
+CORPUS_SCHEMA = "doc_id long, text string"
+LEAK = "the quick brown fox jumps over the lazy dog tonight"
+
+
+def _survivors(spark, corpus_rows, bench_rows):
+    corpus = spark.createDataFrame(corpus_rows, CORPUS_SCHEMA)
+    bench = spark.createDataFrame(bench_rows, CORPUS_SCHEMA)
+    return sorted(
+        tuple(r) for r in decontaminate(corpus, bench, shingle_k=9).collect()
+    )
+
+
+def test_decontaminate_empty_or_null_benchmark_drops_nothing(spark):
+    corpus = [(1, LEAK), (2, ""), (3, None), (4, "short")]
+    expected = sorted(corpus, key=repr)
+    for bench in ([], [(100, None), (101, None)]):
+        assert sorted(_survivors(spark, corpus, bench), key=repr) == expected
+
+
+def test_decontaminate_null_corpus_text_survives(spark):
+    corpus = [(1, None), (2, "he said " + LEAK), (3, "nothing shared at all here")]
+    out = _survivors(spark, corpus, [(100, LEAK)])
+    assert out == [(1, None), (3, "nothing shared at all here")]
+
+
+def test_decontaminate_duplicated_id_drops_every_row(spark):
+    """Id-level semantics (the oracle's ``NOT IN``): one contaminated
+    row drops every row that carries its id."""
+    corpus = [(7, "totally unrelated content here"), (7, LEAK), (8, "clean text only")]
+    assert _survivors(spark, corpus, [(100, LEAK)]) == [(8, "clean text only")]
 
 
 def test_pack_token_budget_semantics(spark):

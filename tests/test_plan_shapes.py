@@ -409,15 +409,17 @@ def test_media_png_histogram_two_arrow_stages(spark):
 
 def test_dedup_labels_consumers_read_materialized_relation(spark):
     """The materialization contract: dedup_labels' returned plan is a
-    scan of the checkpointed relation (no LSH/CC recompute in the
+    scan of the materialized relation (no LSH/CC recompute in the
     plan), and a consumer like component_sizes adds only its own
-    bounded rollup exchanges on top of the same scan."""
+    bounded rollup exchanges on top of the same scan. At test scale the
+    pair graph is driver-small, so the relation is the connected-
+    components local finish's Arrow-built local relation: the whole
+    returned plan is one LocalTableScan node."""
     labels_plan = _plan(entry_mod.queries()["dedup_labels"](spark, SF_DIR))
-    assert "Scan ExistingRDD" in labels_plan
-    assert "MapInPandas" not in labels_plan and "SortMergeJoin" not in labels_plan
+    assert labels_plan.startswith("LocalTableScan") and "+-" not in labels_plan
     consumer_plan = _plan(entry_mod.queries()["component_sizes"](spark, SF_DIR))
-    assert "Scan ExistingRDD" in consumer_plan
-    assert "MapInPandas" not in consumer_plan
+    assert "LocalTableScan" in consumer_plan
+    assert "MapInPandas" not in consumer_plan and "SortMergeJoin" not in consumer_plan
 
 
 def test_streaming_upsert_state_reads_back_batch_plan(spark):

@@ -487,6 +487,52 @@ def test_bench_diff_classifies_deltas_by_spread():
     assert bd._load.__name__ == "_load"
 
 
+def test_bench_diff_attributes_moved_rows_to_layers(capsys, tmp_path):
+    """A slower or faster row is followed by its build/exec/jobs/tasks/
+    Python-time deltas when both artifacts carry that query's layers;
+    a row without layers on one side prints no layer line."""
+    import json
+    import sys
+
+    bd = _load("bench_diff")
+    lay = {"build_s": 0.5, "exec_s": 1.5, "jobs": 3, "tasks": 8, "python_s": 1.0,
+           "stages": 3}
+    old = {
+        "queries": {"a": 2.0, "b": 1.0, "c": 1.0},
+        "layers": {"a": lay, "b": lay},
+    }
+    new = {
+        "queries": {"a": 1.0, "b": 1.5, "c": 2.0},
+        "layers": {
+            "a": dict(lay, exec_s=0.5, jobs=2, tasks=4, python_s=0.0),
+            "b": dict(lay, build_s=1.0),
+        },
+    }
+    assert bd.layer_deltas(old, new, "a") == {
+        "build_s": 0.0, "exec_s": -1.0, "jobs": -1, "tasks": -4, "python_s": -1.0,
+    }
+    assert bd.layer_deltas(old, new, "c") is None
+    paths = []
+    for name, art in (("old", old), ("new", new)):
+        paths.append(tmp_path / f"{name}.json")
+        paths[-1].write_text(json.dumps(art))
+    argv = sys.argv
+    sys.argv = ["bench_diff.py", *map(str, paths)]
+    try:
+        assert bd.main() == 0
+    finally:
+        sys.argv = argv
+    lines = capsys.readouterr().out.splitlines()
+    faster = lines.index(next(x for x in lines if x.startswith("FASTER  a ")))
+    assert lines[faster + 1].split() == [
+        "build_s", "+0", "exec_s", "-1", "jobs", "-1", "tasks", "-4", "python_s", "-1",
+    ]
+    slower_b = lines.index(next(x for x in lines if x.startswith("SLOWER  b ")))
+    assert "build_s +0.5" in lines[slower_b + 1]
+    slower_c = lines.index(next(x for x in lines if x.startswith("SLOWER  c ")))
+    assert not lines[slower_c + 1].startswith(" ")
+
+
 def test_committed_r11_bench_artifact_is_trusted():
     """Ratchet (VERDICT r10 #1): the committed round-11 bench artifact
     carries minima_trusted: true with the FULL per-query map — the

@@ -19,6 +19,12 @@ one of:
   byte-unchanged — check ``git diff``) box-climate drift, which shows
   up as a broad one-sided shift rather than a few isolated rows.
 
+When both artifacts carry per-query ``layers`` (bench.py records
+them for each query's fastest sample), every slower / faster row is
+followed by the deltas of the layers that split it: ``build_s`` and
+``exec_s`` (plan construction vs execution), ``jobs``, ``tasks`` and
+``python_s`` (Python-worker time).
+
 Exit code is ALWAYS 0: deltas need human attribution, not a gate —
 the trust gate lives in bench.py itself (``minima_trusted``).
 """
@@ -71,6 +77,20 @@ def classify(
     return out
 
 
+#: the layers a moved row is attributed to, in print order
+LAYER_KEYS = ("build_s", "exec_s", "jobs", "tasks", "python_s")
+
+
+def layer_deltas(old: dict, new: dict, name: str) -> dict[str, float] | None:
+    """{layer: new - old} for one query, or None unless both artifacts
+    record that query's layers."""
+    lo = old.get("layers", {}).get(name)
+    ln = new.get("layers", {}).get(name)
+    if lo is None or ln is None:
+        return None
+    return {k: round(ln[k] - lo[k], 4) for k in LAYER_KEYS if k in lo and k in ln}
+
+
 def _load(path: str) -> dict:
     with open(path) as fh:
         art = json.load(fh)
@@ -101,6 +121,9 @@ def main() -> int:
     for bucket in ("slower", "faster"):
         for name, o, n, d in buckets[bucket]:
             print(f"{bucket.upper():7s} {name:32s} {o:8.3f} -> {n:8.3f}  ({d:+.3f})")
+            layers = layer_deltas(old, new, name)
+            if layers:
+                print("        " + "  ".join(f"{k} {v:+g}" for k, v in layers.items()))
     n_noise = len(buckets["within_noise"])
     for bucket in ("added", "removed"):
         rows = buckets[bucket]

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .partitioning import ensure_parallelism
+from .partitioning import ensure_parallelism, local_frame
 from .similarity import quantize_embeddings
 
 
@@ -83,6 +83,8 @@ def _assign_kernel(centroids: list[list[int]]):
 # tiny-corpus latency the local twin avoids (iters+1) job launches
 # and a whole-stage-codegen recompile per iteration (the centroid
 # LITERALS change every round, so each round's plan is new source).
+# Its assignments come back as an Arrow-built frame (``local_frame``),
+# which starts no Python worker.
 LOCAL_FINISH_MAX_CELLS = 1 << 22
 
 
@@ -171,7 +173,9 @@ def kmeans_quantized(
     the same counted-bound escape hatch as the graph operators' peel
     finish. At 100 TB the gate never fires; at tiny-corpus scale it
     cuts (iters+1) job launches and the per-iteration codegen
-    recompile that changing centroid literals force.
+    recompile that changing centroid literals force, and returns its
+    assignments through ``local_frame`` (JVM-decoded Arrow, no Python
+    worker).
 
     Output: (``id_col``, cluster, dist2) — cluster in [0, k), dist2 the
     integer squared distance to the winning centroid.
@@ -245,7 +249,8 @@ def kmeans_quantized(
                 T.StructField("dist2", T.LongType(), True),
             ]
         )
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(r[0], int(c), int(b)) for r, c, b in zip(rows, cl, best)],
             out_schema,
         )

@@ -35,8 +35,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .partitioning import ensure_parallelism
+from .partitioning import ensure_parallelism, local_frame
 
 # Coefficients for the universal-hash family h_i(x) = (a_i*x + b_i) mod P.
 # P is the Mersenne prime 2^31-1; a_i odd, b_i from a fixed schedule —
@@ -124,6 +125,34 @@ def _hash64(col: Column) -> Column:
     )
 
 
+def _codepoints(text: str) -> np.ndarray:
+    """One int64 codepoint per character (utf-32-le is one uint32 per
+    char, so no per-character ``ord`` loop)."""
+    return np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+
+
+def _shingle_hashes(text: str, k: int) -> np.ndarray:
+    """Polynomial hash of every character ``k``-gram of ``text``, in
+    position order, duplicates kept: h_i = fold(cp[i : i+k], 0,
+    (h*B + c) mod P), all positions at once. The one shingle hash of
+    every Arrow kernel here (MinHash, hash sets, winnowing, CDC) and of
+    the decontamination benchmark set. Every step is an int64
+    multiply-add-mod on values < P, so it equals the SQL fold
+    (``_hash64``) bit for bit. A text shorter than ``k`` is one
+    truncated shingle: the fold of the whole string ('' folds to 0)."""
+    cp = _codepoints(text)
+    n = cp.shape[0]
+    if n < k:
+        acc = 0
+        for c in cp:
+            acc = (acc * POLY_BASE + int(c)) % MINHASH_PRIME
+        return np.array([acc], dtype=np.int64)
+    h = cp[: n - k + 1].copy()
+    for j in range(1, k):
+        h = (h * POLY_BASE + cp[j : n - k + 1 + j]) % MINHASH_PRIME
+    return h
+
+
 def _minhash_sig_kernel(num_hashes: int, shingle_k: int):
     """Arrow-vectorized MinHash signature column: exact integer math,
     bit-identical to the DuckDB oracle (and to the expression reference
@@ -147,22 +176,7 @@ def _minhash_sig_kernel(num_hashes: int, shingle_k: int):
             if t is None:
                 out.append(None)
                 continue
-            # utf-32-le == one uint32 codepoint per char, vectorized
-            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
-            n = cp.shape[0]
-            if n >= shingle_k:
-                # rolling: h_i = poly(cp[i : i+k]) mod P, all positions at once
-                h = cp[: n - shingle_k + 1].copy()
-                for j in range(1, shingle_k):
-                    h = (h * POLY_BASE + cp[j : n - shingle_k + 1 + j]) % MINHASH_PRIME
-            else:
-                # single truncated shingle (the whole string; '' folds to 0)
-                acc = 0
-                for c in cp:
-                    acc = (acc * POLY_BASE + int(c)) % MINHASH_PRIME
-                h = np.array([acc], dtype=np.int64)
+            h = _shingle_hashes(t, shingle_k)
             # family min: sig_i = min_h (a_i*h + b_i) mod P  (a_i*h < 2^36, exact)
             out.append(
                 ((h[:, None] * a_coef[None, :] + b_coef[None, :]) % MINHASH_PRIME).min(
@@ -182,36 +196,21 @@ def _minhash_sig_kernel(num_hashes: int, shingle_k: int):
 
 def _shingle_hset_kernel(shingle_k: int):
     """Arrow-vectorized DISTINCT shingle-hash set (sorted longs) per doc —
-    the exact-verification payload for n-gram Jaccard. Intersecting two
-    long arrays is ~an order of magnitude cheaper than intersecting the
-    9-char shingle STRING arrays (no string hashing/equality)."""
+    the exact-verification payload for n-gram Jaccard and the token set
+    of the prefix-filter join. Intersecting two long arrays is ~an order
+    of magnitude cheaper than intersecting the 9-char shingle STRING
+    arrays (no string hashing/equality)."""
 
     @F.pandas_udf("array<long>")
     def hset(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
-            n = cp.shape[0]
-            if n >= shingle_k:
-                h = cp[: n - shingle_k + 1].copy()
-                for j in range(1, shingle_k):
-                    h = (h * POLY_BASE + cp[j : n - shingle_k + 1 + j]) % MINHASH_PRIME
-            else:
-                acc = 0
-                for c in cp:
-                    acc = (acc * POLY_BASE + int(c)) % MINHASH_PRIME
-                h = np.array([acc], dtype=np.int64)
-            out.append(np.unique(h))
-        return pd.Series(out)
+        return pd.Series(
+            [None if t is None else np.unique(_shingle_hashes(t, shingle_k))
+             for t in texts]
+        )
 
     # asNondeterministic: stop Catalyst re-evaluating the kernel below
     # exchanges for inferred explode/isnotnull constraints (measured r12:
-    # hset() ran twice on decontaminate's benchmark branch — guide §4.4)
+    # hset() ran twice on one plan branch); it is pure
     return hset.asNondeterministic()
 
 
@@ -467,11 +466,12 @@ def duplicate_clusters(
     materializing action the loop needs anyway) the components are
     resolved by a driver-side union-find with min-root merging:
     byte-equal to the distributed fixpoint (twin-tested), none of the
-    per-round join/agg/checkpoint jobs. At 100 TB the bound never
-    binds until the pairs ARE driver-small; 0 disables. The
-    ``max_iterations`` cap on the distributed loop is LOUD (same
-    contract as kcore): exhausting it without convergence raises
-    instead of returning wrong labels — the DuckDB oracle runs the
+    per-round join/agg/checkpoint jobs, and the labels come back as an
+    Arrow-built frame (``local_frame``: no Python worker starts). At
+    100 TB the bound never binds until the pairs ARE driver-small; 0
+    disables. The ``max_iterations`` cap on the distributed loop is
+    LOUD (same contract as kcore): exhausting it without convergence
+    raises instead of returning wrong labels — the DuckDB oracle runs the
     recursion to its true fixpoint.
     """
     # A pair with a NULL id has only one endpoint — it cannot
@@ -495,18 +495,15 @@ def duplicate_clusters(
     # Same durability class as shuffle files (recompute-on-loss).
     edges = edges.localCheckpoint(eager=False)
     if local_finish_edges and edges.count() <= local_finish_edges:
-        spark = edges.sparkSession
         collected = [(r[0], r[1]) for r in edges.collect()]
         labels_map = _cc_local(collected)
-        from pyspark.sql import types as T
-
         schema = T.StructType(
             [
                 T.StructField("id", edges.schema["src"].dataType),
                 T.StructField("cluster_id", edges.schema["src"].dataType),
             ]
         )
-        return spark.createDataFrame(sorted(labels_map.items()), schema)
+        return local_frame(edges.sparkSession, sorted(labels_map.items()), schema)
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("cluster_id")
     )
@@ -920,19 +917,7 @@ def _winnow_kernel(shingle_k: int, window: int):
             if t is None:
                 out.append(None)
                 continue
-            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
-            n = cp.shape[0]
-            if n >= shingle_k:
-                h = cp[: n - shingle_k + 1].copy()
-                for j in range(1, shingle_k):
-                    h = (h * POLY_BASE + cp[j : n - shingle_k + 1 + j]) % MINHASH_PRIME
-            else:
-                acc = 0
-                for c in cp:
-                    acc = (acc * POLY_BASE + int(c)) % MINHASH_PRIME
-                h = np.array([acc], dtype=np.int64)
+            h = _shingle_hashes(t, shingle_k)
             if h.shape[0] >= window:
                 mins = np.lib.stride_tricks.sliding_window_view(h, window).min(axis=1)
             else:
@@ -1143,7 +1128,7 @@ def _cdc_kernel(window: int, mask_mod: int):
     cost at sf0.1). The kernel computes the same integers in numpy:
 
     - rolling window hash per position: the same unrolled
-      ``(h*B + c) % P`` fold ``_hashset_kernel`` uses (bit-identical —
+      ``(h*B + c) % P`` fold ``_shingle_hashes`` computes (bit-identical —
       every step is int64 multiply-add-mod on the same operands);
     - per-chunk hashes via modular PREFIX hashing: with
       ``H[k] = fold(codes[:k])``, ``fold(codes[s-1:e]) =
@@ -1178,14 +1163,10 @@ def _cdc_kernel(window: int, mask_mod: int):
                 len_out.append(None)
                 hash_out.append(None)
                 continue
-            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
+            cp = _codepoints(t)
             n = cp.shape[0]
             if n >= window:
-                h = cp[: n - window + 1].copy()
-                for j in range(1, window):
-                    h = (h * b + cp[j : n - window + 1 + j]) % p
+                h = _shingle_hashes(t, window)
                 cuts = np.nonzero(h % mask_mod == 0)[0] + window
                 ends = np.unique(
                     np.concatenate([cuts, np.array([n], dtype=np.int64)])
@@ -1270,42 +1251,6 @@ def cdc_chunks(
     )
 
 
-def _hashset_kernel(shingle_k: int):
-    """Arrow-vectorized sorted-distinct rolling k-gram hash set —
-    the whole-document shingle-set twin of ``_winnow_kernel`` (same
-    polynomial hash, no window minimum). ``asNondeterministic`` stops
-    Catalyst from cloning the kernel into inferred filters below
-    generate nodes (the NOTES posexplode lesson); it is pure."""
-
-    @F.pandas_udf("array<long>")
-    def hset(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
-            n = cp.shape[0]
-            if n >= shingle_k:
-                h = cp[: n - shingle_k + 1].copy()
-                for j in range(1, shingle_k):
-                    h = (h * POLY_BASE + cp[j : n - shingle_k + 1 + j]) % MINHASH_PRIME
-            else:
-                acc = 0
-                for c in cp:
-                    acc = (acc * POLY_BASE + int(c)) % MINHASH_PRIME
-                h = np.array([acc], dtype=np.int64)
-            out.append(np.unique(h))
-        return pd.Series(out)
-
-    # asNondeterministic: stop Catalyst re-evaluating the kernel below
-    # exchanges for inferred explode/isnotnull constraints (measured r12:
-    # hset() ran twice on decontaminate's benchmark branch — guide §4.4)
-    return hset.asNondeterministic()
-
-
 def prefix_filter_jaccard_join(
     df: DataFrame,
     text_col: str = "text",
@@ -1353,7 +1298,7 @@ def prefix_filter_jaccard_join(
     # Catalyst clone the whole 300-element fold into inferred
     # null/size filters — measured 67 s for the first stage alone on
     # 70 docs vs ~1 s with the kernel behind a checkpoint.
-    kern = _hashset_kernel(shingle_k)
+    kern = _shingle_hset_kernel(shingle_k)
     toks = (
         df.select(F.col(id_col).alias("_id"), kern(F.col(text_col)).alias("_set"))
         .withColumn("_s", F.size("_set").cast("long"))

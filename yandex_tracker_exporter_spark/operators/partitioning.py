@@ -105,6 +105,29 @@ def ensure_parallelism(df: DataFrame, min_factor: float = 1.0) -> DataFrame:
     return df
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order) —
+    the result of an operator's local finish.
+
+    The rows go in as one ``pyarrow.Table`` typed by ``schema``, which
+    the JVM decodes itself. ``spark.createDataFrame(list, schema)``
+    would instead ship them through ``sc.parallelize`` and a Python
+    ``map``: a PythonRDD job whose first run in a session starts an RDD
+    Python daemon and forks its workers (seconds, for a few hundred
+    rows), and which ``spark.python_s`` does not count because it has no
+    SQL Python node."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def zorder_key(
     x,  # Column: first dimension (non-negative int)
     y,  # Column: second dimension (non-negative int)
