@@ -44,6 +44,7 @@ from yandex_tracker_exporter_spark.operators.text_analysis import (
     quality_score,
     token_counts,
 )
+from yandex_tracker_exporter_spark.session import refresh, session_memo
 from yandex_tracker_exporter_spark.sources.tables import load_table
 
 WATERMARK_TS = "2024-03-01 00:00:00"
@@ -51,15 +52,6 @@ WATERMARK_TS = "2024-03-01 00:00:00"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-#: split-count probe results per (sf_dir, table): the probe
-#: (``df.rdd.getNumPartitions``) costs a plan→RDD conversion — ~0.1-0.5 s
-#: of driver work per FRESH DataFrame — and a static file's split count
-#: never changes within a process, so pay it once per table, not once
-#: per query (measured: the uncached probe added 0.3-0.5 s to every
-#: trivial map-only contract query in bench context).
-_WIDE_PROBE_CACHE: dict[tuple[str, str, str], bool] = {}
 
 
 def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,16 +62,16 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     at real scale (file count provides the parallelism for free) these
     plans carry NO extra exchange."""
     df = load_table(spark, sf_dir, name)
-    # key by applicationId (like _DEDUP_LABELS_CACHE): a process that
-    # cycles SparkSessions with different parallelism must re-probe, or
-    # a stale False serializes every CPU-heavy stage on the old split
-    # count
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _WIDE_PROBE_CACHE:
-        _WIDE_PROBE_CACHE[key] = (
-            df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-        )
-    if _WIDE_PROBE_CACHE[key]:
+    # the split-count probe (a plan→RDD conversion, ~0.1-0.5 s of driver
+    # work per fresh DataFrame) is memoized per session: a static file's
+    # split count never changes, and a restarted session with different
+    # parallelism re-probes instead of reading a stale answer
+    wide = session_memo(
+        spark,
+        ("wide_probe", os.path.abspath(sf_dir), name),
+        lambda: df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism,
+    )
+    if wide:
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
@@ -331,18 +323,12 @@ def q_exact_dedup(spark, sf_dir):
 def q_minhash_pairs(spark, sf_dir):
     """MinHash+LSH near-duplicate candidate pairs.
 
-    REFRESHES the shared pairs cache (the q_dedup_labels pattern): its
+    REFRESHES the memoized pairs (the q_dedup_labels pattern): its
     measured cost is the honest one-time LSH materialization price
     (signatures + banded join + verify), and the consumers'
     (edit_distance_pairs, dedup_labels) measured costs are steady-state
     reads — together they model the real pipeline's cost split."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evicted = _LSH_PAIRS_CACHE.pop(key, None)
-    prior = _LSH_PAIRS_RETIRED.pop(key, None)
-    if prior is not None:
-        _free_labels_blocks(spark, prior)
-    if evicted is not None:
-        _LSH_PAIRS_RETIRED[key] = evicted
+    refresh(spark, ("lsh_pairs", os.path.abspath(sf_dir)))
     return _lsh_pairs(spark, sf_dir).select(
         F.col("a_id").cast("long"), F.col("b_id").cast("long"), "est_jaccard"
     )
@@ -1543,129 +1529,42 @@ def q_media_metadata_stats(spark, sf_dir):
     )
 
 
-#: session-scoped materialization of the shared LSH→CC labels relation:
-#: (applicationId, sf_dir) → eagerly localCheckpointed labels DataFrame.
-#: A real curation pipeline computes the duplicate-cluster labels ONCE
-#: and every downstream consumer (collapse, keep-best, size histogram,
-#: accounting report) reads the materialized relation; the contract
-#: mirrors that (VERDICT r4 #2) while keeping each consumer's oracle
-#: independent — the first consumer in a session pays the compute, the
-#: rest scan the checkpointed rows.
-_DEDUP_LABELS_CACHE: dict = {}
-#: entries evicted by a q_dedup_labels refresh wait here one generation
-#: before their checkpoint blocks are unpersisted — see q_dedup_labels
-_DEDUP_LABELS_RETIRED: dict = {}
-#: MinHash+LSH candidate pairs, materialized once per (session, sf_dir)
-#: — the shared intermediate that q_minhash_pairs (prices it),
-#: edit_distance_pairs (exact verify) and _dedup_labels (CC over
-#: pairs) all consume. Same machinery as the labels cache.
-_LSH_PAIRS_CACHE: dict = {}
-_LSH_PAIRS_RETIRED: dict = {}
-
-
-def _free_labels_blocks(spark, entry) -> None:
-    """Unpersist the checkpoint blocks recorded with an evicted cache
-    entry. Without this, each refresh leaves the previous labels' blocks
-    in the block manager until Python GC / ContextCleaner happens to
-    reclaim them — unbounded-ish storage growth in long sessions that
-    refresh repeatedly (driver ADVICE r5). Only valid for entries made
-    on the LIVE context: RDD ids restart at 0 per context, so an id
-    recorded under a stopped app could alias a live RDD here.
-
-    Deterministic eviction means a holder of the OLD labels DataFrame
-    must not execute it after a refresh — the contract consumers all
-    re-resolve through :func:`_dedup_labels`, which is the supported
-    access path."""
-    _, rdd_ids = entry
-    live = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in rdd_ids:
-        jrdd = live.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-
-
-def _checkpoint_block_ids(df) -> tuple:
-    """RDD ids of the localCheckpoint blocks that back ``df``: walk the
-    analyzed plan for LogicalRDD leaves (what ``localCheckpoint``
-    returns) and read each one's persisted RDD id. Plan-derived, so it
-    names exactly the blocks this relation owns — unlike a before/after
-    ``getPersistentRDDs`` set diff, it cannot capture (and later
-    destroy) an RDD another thread happened to persist concurrently."""
-    ids = []
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getName().endswith(".LogicalRDD"):
-            ids.append(node.rdd().id())
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-    return tuple(sorted(set(ids)))
-
-
 def _lsh_pairs(spark, sf_dir):
     """MinHash+LSH near-dup candidate pairs (a_id, b_id, est_jaccard),
-    computed once per (session, sf_dir) and eagerly localCheckpointed —
-    the labels-cache pattern (round 5) applied one stage earlier. Three
-    contract queries used to run the FULL LSH pipeline independently
-    (q_minhash_pairs, q_edit_distance_pairs, _dedup_labels); a real
-    pipeline materializes the candidate pairs once and fans out. The
-    refresh/pricing query is q_minhash_pairs (the LSH stage's honest
-    one-time cost); the others are steady-state reads. A bare session
-    running any single consumer still works — cache miss computes."""
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _LSH_PAIRS_CACHE if k[0] != app]:
-        _LSH_PAIRS_CACHE.pop(stale, None)
-    for stale in [k for k in _LSH_PAIRS_RETIRED if k[0] != app]:
-        _LSH_PAIRS_RETIRED.pop(stale, None)
-    key = (app, sf_dir)
-    cached = _LSH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached[0]
-    docs = _t_wide(spark, sf_dir, "documents")
-    pairs = minhash_lsh_duplicates(docs, "text", "doc_id", threshold=0.5)
-    pairs = pairs.localCheckpoint(eager=True)
-    _LSH_PAIRS_CACHE[key] = (pairs, _checkpoint_block_ids(pairs))
-    return pairs
+    computed once per (session, sf_dir) and eagerly localCheckpointed.
+    Three contract queries consume them (q_minhash_pairs,
+    q_edit_distance_pairs, _dedup_labels); a real pipeline materializes
+    the candidate pairs once and fans out. The refresh/pricing query is
+    q_minhash_pairs (the LSH stage's honest one-time cost); the others
+    are steady-state reads. A bare session running any single consumer
+    still works — a memo miss computes."""
+    return session_memo(
+        spark,
+        ("lsh_pairs", os.path.abspath(sf_dir)),
+        lambda: minhash_lsh_duplicates(
+            _t_wide(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.5
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _dedup_labels(spark, sf_dir):
     """MinHash+LSH pairs → connected-component labels (id, cluster_id),
     computed once per (session, sf_dir) and materialized (eagerly
-    checkpointed, or the driver-side finish's local relation).
+    checkpointed, or the driver-side finish's local relation). A real
+    curation pipeline computes the duplicate-cluster labels ONCE and
+    every downstream consumer (collapse, keep-best, size histogram,
+    accounting report) reads the materialized relation; each consumer's
+    oracle stays independent. CC's rounds read the memoized pairs'
+    resident blocks instead of re-deriving the LSH plan.
     The label is the cluster's minimum doc_id — deterministic regardless
     of join/iteration order, which is what lets a recursive DuckDB CTE
     reproduce the iterative min-label propagation bit-for-bit
     (operators/dedup.py:duplicate_clusters)."""
-    app = spark.sparkContext.applicationId
-    # prune entries from stopped sessions: their checkpointed blocks died
-    # with the old JVM context (do NOT unpersist via the new context —
-    # RDD ids restart per context and could alias a live RDD), but the
-    # py4j references would otherwise pin dict entries forever in
-    # long-lived processes (test suites, tools that cycle SparkSessions)
-    for stale in [k for k in _DEDUP_LABELS_CACHE if k[0] != app]:
-        _DEDUP_LABELS_CACHE.pop(stale, None)
-    for stale in [k for k in _DEDUP_LABELS_RETIRED if k[0] != app]:
-        _DEDUP_LABELS_RETIRED.pop(stale, None)
-    key = (app, sf_dir)
-    cached = _DEDUP_LABELS_CACHE.get(key)
-    if cached is not None:
-        return cached[0]
-    # pairs come from the shared session cache (see _lsh_pairs): CC's
-    # rounds then read resident blocks instead of re-deriving the LSH
-    # plan. (The pre-cache formulation deliberately avoided an outer
-    # checkpoint on pairs because CC materialized them internally; with
-    # the cache the one eager pairs materialization is shared by three
-    # queries, which strictly dominates.)
-    pairs = _lsh_pairs(spark, sf_dir)
-    labels = duplicate_clusters(pairs, "a_id", "b_id")
-    # record the block-backed RDD ids that the labels relation itself
-    # owns (its LogicalRDD leaves); iteration-internal checkpoints are
-    # NOT pinned by the cache and the ContextCleaner reclaims them as
-    # their Python references drop — eviction only needs to free what
-    # the dict entry keeps alive
-    _DEDUP_LABELS_CACHE[key] = (labels, _checkpoint_block_ids(labels))
-    return labels
+    return session_memo(
+        spark,
+        ("dedup_labels", os.path.abspath(sf_dir)),
+        lambda: duplicate_clusters(_lsh_pairs(spark, sf_dir), "a_id", "b_id"),
+    )
 
 
 def q_dedup_labels(spark, sf_dir):
@@ -1673,24 +1572,12 @@ def q_dedup_labels(spark, sf_dir):
     materialization step every dedup consumer reads. (doc_id,
     cluster_id) for every doc that belongs to a near-dup cluster.
 
-    This query REFRESHES the session cache instead of reading it, so
+    This query REFRESHES the session memo instead of reading it, so
     its measured cost is the honest one-time materialization price
     (LSH signatures + banded join + CC iteration) and the consumers'
     measured costs are the steady-state reads — together they model
     the real pipeline's cost split."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evicted = _DEDUP_LABELS_CACHE.pop(key, None)
-    # One-generation grace: free the blocks of the entry retired by the
-    # PREVIOUS refresh, and park the just-evicted one. An in-flight
-    # consumer of the old labels (same-app concurrent thread — the
-    # bench + manifest-sweep pattern) keeps its checkpoint blocks alive
-    # through a full refresh cycle instead of losing them mid-job;
-    # memory stays bounded at one stale generation per (app, sf_dir).
-    prior = _DEDUP_LABELS_RETIRED.pop(key, None)
-    if prior is not None:
-        _free_labels_blocks(spark, prior)
-    if evicted is not None:
-        _DEDUP_LABELS_RETIRED[key] = evicted
+    refresh(spark, ("dedup_labels", os.path.abspath(sf_dir)))
     return _dedup_labels(spark, sf_dir).select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),

@@ -372,8 +372,9 @@ def write_plans(spark, sf_dir: str, names: list[str], outdir: str) -> None:
     """Build each query and write its formatted explain to
     ``outdir/<query>.txt``. Building some queries runs real jobs
     (streaming pipeline, checkpoint probes), so a full sweep takes
-    minutes. Plans are byte-stable across fresh sessions: a before/after
-    pair is two directories, each written by its own process."""
+    minutes. A before/after pair is two directories, each written by its
+    own process; ``plan_id=N`` shifts between runs of the same code after
+    a query whose build runs a job, so diff with it masked."""
     qs = entry_mod.queries()
     os.makedirs(outdir, exist_ok=True)
     for name in names:

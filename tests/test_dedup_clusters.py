@@ -83,6 +83,7 @@ def test_dedup_labels_refresh_releases_blocks(spark, monkeypatch):
     import functools
 
     import __spark_entry__ as entry_mod
+    from yandex_tracker_exporter_spark import session
     from yandex_tracker_exporter_spark.operators import dedup as dedup_mod
 
     monkeypatch.setattr(
@@ -92,21 +93,19 @@ def test_dedup_labels_refresh_releases_blocks(spark, monkeypatch):
     )
     sf = "/root/testdata/sf0.001"
     q = entry_mod.queries()["dedup_labels"]
-    # drop any cache entry built by earlier tests under the default path
-    entry_mod._DEDUP_LABELS_CACHE.pop(
-        (spark.sparkContext.applicationId, sf), None
-    )
-    q(spark, sf).count()  # populate the cache
-    key = (spark.sparkContext.applicationId, sf)
-    _, first_ids = entry_mod._DEDUP_LABELS_CACHE[key]
+    key = (spark.sparkContext.applicationId, "dedup_labels", sf)
+    # drop any memo entry built by earlier tests under the default path
+    session._MEMO.pop(key, None)
+    q(spark, sf).count()  # populate the memo
+    first_ids = session.checkpoint_block_ids(session._MEMO[key])
     assert first_ids, "materialization must record its block-backed RDDs"
-    # an unrelated relation checkpointed while the cache entry is live
+    # an unrelated relation checkpointed while the memo entry is live
     # (models a concurrent query on the same session) must NOT be
     # captured by the entry — block ids are plan-derived, not a
     # before/after getPersistentRDDs diff
     bystander = spark.range(100).localCheckpoint(eager=True)
     assert set(first_ids).isdisjoint(
-        entry_mod._checkpoint_block_ids(bystander)
+        session.checkpoint_block_ids(bystander)
     )
     old_labels = entry_mod._dedup_labels(spark, sf)
     q(spark, sf).count()  # refresh 1: first entry parked, NOT freed
@@ -122,7 +121,7 @@ def test_dedup_labels_refresh_releases_blocks(spark, monkeypatch):
     assert not still, f"retired entry left persistent RDDs: {still}"
     # the bystander's checkpoint blocks survived both evictions intact
     assert bystander.count() == 100
-    by_ids = entry_mod._checkpoint_block_ids(bystander)
+    by_ids = session.checkpoint_block_ids(bystander)
     assert all(live.get(rid) is not None for rid in by_ids)
     # the refreshed relation is intact and non-trivial
     assert q(spark, sf).count() > 0
@@ -181,21 +180,22 @@ def test_lsh_pairs_cache_consumers_read_one_materialization(spark):
     the one-time materialization (refresh), edit_distance_pairs and
     dedup_labels read steady-state. Results must be byte-identical to
     the uncached direct computation, and the second consumer must reuse
-    the FIRST consumer's checkpointed relation (same cache entry)."""
+    the FIRST consumer's checkpointed relation (same memo entry)."""
     import __spark_entry__ as entry_mod
+    from yandex_tracker_exporter_spark import session
     from yandex_tracker_exporter_spark.operators.dedup import (
         minhash_lsh_duplicates,
     )
 
     sf = "/root/testdata/sf0.001"
-    key = (spark.sparkContext.applicationId, sf)
-    entry_mod._LSH_PAIRS_CACHE.pop(key, None)
+    key = (spark.sparkContext.applicationId, "lsh_pairs", sf)
+    session._MEMO.pop(key, None)
 
     got_pairs = sorted(
         map(tuple, entry_mod.queries()["minhash_lsh_pairs"](spark, sf).collect())
     )
-    entry_after_refresh = entry_mod._LSH_PAIRS_CACHE.get(key)
-    assert entry_after_refresh is not None, "refresh must populate the cache"
+    entry_after_refresh = session._MEMO.get(key)
+    assert entry_after_refresh is not None, "refresh must populate the memo"
 
     docs = entry_mod._t_wide(spark, sf, "documents")
     direct = sorted(
@@ -206,10 +206,10 @@ def test_lsh_pairs_cache_consumers_read_one_materialization(spark):
     )
     assert got_pairs == direct
 
-    # steady-state consumer: edit_distance reads the SAME cache entry
+    # steady-state consumer: edit_distance reads the SAME memo entry
     ed = entry_mod.queries()["edit_distance_pairs"](spark, sf)
     ed_rows = {(r[0], r[1]) for r in ed.collect()}
-    assert entry_mod._LSH_PAIRS_CACHE.get(key) is entry_after_refresh
+    assert session._MEMO.get(key) is entry_after_refresh
     assert ed_rows == {(a, b) for a, b, _ in direct}
     # every scored pair has a real distance (text joined on both sides)
     assert all(r["edit_distance"] is not None for r in ed.collect())

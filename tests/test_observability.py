@@ -3,10 +3,7 @@
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.etl import transform_issues
-from yandex_tracker_exporter_spark.observability import (
-    MetricsCollector,
-    with_run_counters,
-)
+from yandex_tracker_exporter_spark.observability import with_run_counters
 from yandex_tracker_exporter_spark.operators.sessionize import (
     corrupt_transition_events,
     status_metrics,
@@ -21,10 +18,6 @@ def test_observed_counters_no_extra_pass(spark, raw_issues, raw_changelog):
     assert metrics["n_rows"] == n == 3
     assert metrics["null_keys"] == 0
     assert metrics["max_updated_at"] is not None
-
-    collector = MetricsCollector(spark)
-    entry = collector.record(obs, tags={"table": "issues"})
-    assert entry["table"] == "issues" and entry["n_rows"] == 3
 
 
 def test_corrupt_events_quarantined_not_lost(spark, raw_issues, raw_changelog):

@@ -1,12 +1,12 @@
-"""Run metrics via ``df.observe`` + listeners (U3/A3/A4) and error
+"""Run metrics via ``df.observe`` (U3/A3/A4) and error
 shipping (the Sentry analogue).
 
 The reference wraps methods with DogStatsd count/gauge/timing decorators
 (``services/monitoring.py:44-77``) and logs RSS/throughput every N rows
 (``etl.py:156-161``). Spark-native equivalents: ``df.observe`` attaches
 named aggregates that are computed DURING the action (no extra pass —
-the reference's counters each cost a python statement per row), and a
-``QueryExecutionListener`` receives them asynchronously.
+the reference's counters each cost a python statement per row), read
+from the returned ``Observation`` once the action has run.
 
 Error shipping mirrors ``sentry_sdk.init(before_send=sentry_events_filter)``
 (``services/monitoring.py:80-89`` + ``main.py``): exceptions become event
@@ -22,7 +22,7 @@ import time
 import traceback
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -50,20 +50,6 @@ def with_run_counters(df: DataFrame, name: str = "etl") -> tuple[DataFrame, Obse
     if ts_col:
         metrics.append(F.max(ts_col).alias("max_updated_at"))
     return df.observe(obs, *metrics), obs
-
-
-class MetricsCollector:
-    """Minimal QueryExecutionListener bridge: collects observed metrics
-    per completed action (the DogStatsd-gauge analogue)."""
-
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-        self.records: list[dict] = []
-
-    def record(self, obs: Observation, tags: dict | None = None) -> dict:
-        entry = {**(tags or {}), **obs.get}
-        self.records.append(entry)
-        return entry
 
 
 class StatsdExporter:

@@ -8,13 +8,17 @@ default 200 (which is wrong at both ends of the scale spectrum).
 On a real cluster these settings come from spark-submit / cluster conf;
 ``get_spark`` only fills in what is unset so it composes with any
 deployment.
+
+``session_memo`` is the one place a session's reusable intermediates
+live (read plans, split probes, materialized shared relations).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned-for-scale defaults; every one of these matters at 100 TB:
 #  - AQE re-plans at runtime (coalesce small shuffle partitions, convert
@@ -86,3 +90,74 @@ def get_spark(
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+#: Session memo: (applicationId, *key) → value. Read plans, split probes
+#: and eagerly checkpointed shared relations are built once per session
+#: and reused by its later queries, the way a pipeline computes a
+#: relation once and fans it out. A restarted session rebuilds.
+_MEMO: dict = {}
+#: one parked generation per key, see ``refresh``
+_RETIRED: dict = {}
+_MISSING = object()
+
+
+def _scoped(spark: SparkSession, key: tuple) -> tuple:
+    """Full memo key; first drops every entry of another application.
+    Their blocks died with the old context (never unpersist them through
+    the new one: RDD ids restart per context and could alias a live
+    RDD), but their py4j references would pin them for the life of the
+    process. Iterates snapshots, so a concurrent insert is safe."""
+    app = spark.sparkContext.applicationId
+    for store in (_MEMO, _RETIRED):
+        for k in list(store):
+            if k[0] != app:
+                store.pop(k, None)
+    return (app, *key)
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], Any]):
+    """The value of ``key`` in this session; ``build()`` runs on a miss."""
+    full = _scoped(spark, key)
+    value = _MEMO.get(full, _MISSING)
+    if value is _MISSING:
+        value = _MEMO[full] = build()
+    return value
+
+
+def refresh(spark: SparkSession, key: tuple) -> None:
+    """Make the next ``session_memo(key)`` rebuild, with one generation
+    of grace: the displaced entry is parked, and the entry parked by the
+    previous refresh has its checkpoint blocks unpersisted now. A
+    same-session thread still running on the old relation keeps its
+    blocks through one refresh; storage stays bounded at one stale
+    generation per key. Consumers re-resolve through ``session_memo``."""
+    full = _scoped(spark, key)
+    evicted = _MEMO.pop(full, None)
+    prior = _RETIRED.pop(full, None)
+    if prior is not None:
+        live = spark.sparkContext._jsc.getPersistentRDDs()
+        for rid in checkpoint_block_ids(prior):
+            jrdd = live.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)
+    if evicted is not None:
+        _RETIRED[full] = evicted
+
+
+def checkpoint_block_ids(df: DataFrame) -> tuple:
+    """RDD ids of the localCheckpoint blocks that back ``df``: the
+    persisted RDD of each LogicalRDD leaf (what ``localCheckpoint``
+    returns) in the analyzed plan. Plan-derived, so it names exactly the
+    blocks this relation owns and never an RDD that another thread
+    persisted concurrently."""
+    ids = []
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getName().endswith(".LogicalRDD"):
+            ids.append(node.rdd().id())
+        children = node.children()
+        for i in range(children.size()):
+            stack.append(children.apply(i))
+    return tuple(sorted(set(ids)))

@@ -16,17 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from yandex_tracker_exporter_spark.schemas import TESTDATA_TABLES
-
-#: Read-PLAN memo per (session, sf_dir, table): ``spark.read.parquet``
-#: costs driver-side file listing + footer/schema reads (plus the
-#: ``dtypes`` inspection round-trips below) on EVERY call, and a static
-#: file's schema never changes within a process. Caching the analyzed
-#: DataFrame (an immutable logical plan — no data, no results; the same
-#: class of metadata caching as Spark's own file-listing cache, and the
-#: `_WIDE_PROBE_CACHE` precedent one module over) pays it once per
-#: table. Keyed by applicationId so a stopped/restarted session never
-#: sees a stale plan. (r12 optimization, guide §6.)
-_READ_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+from yandex_tracker_exporter_spark.session import session_memo
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -35,7 +25,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The harness ``events`` table carries nanosecond timestamps, which
     Spark only reads as raw longs (``nanosAsLong``); they are converted
     here to µs-precision ``TimestampType`` so every consumer sees a real
-    timestamp column.
+    timestamp column. The read plan (an immutable analyzed DataFrame,
+    no data) is memoized per session: ``spark.read.parquet`` pays file
+    listing and footer reads, and the ``dtypes`` checks py4j round
+    trips, on every call, while a static file's schema never changes.
     """
     # Runtime confs, harmless when already set; required because the
     # driver's own SparkSession won't carry them: ns-parquet reading and
@@ -44,10 +37,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # caller may have flipped the session timezone between queries).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    cached = _READ_PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return session_memo(
+        spark,
+        ("read_plan", os.path.abspath(sf_dir), name),
+        lambda: _read_table(spark, sf_dir, name),
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -59,7 +56,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-    _READ_PLAN_CACHE[key] = df
     return df
 
 
